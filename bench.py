@@ -14,18 +14,34 @@ import json
 import os
 import sys
 import time
+from dataclasses import dataclass
+from typing import Callable
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Queries whose plan build trains a model behind a per-sf_dir memo
-# (LR weights / IVF centroids / PQ codebooks). Their timed reps clear
-# the memos first so the bench row includes training (r14 verdict
-# item 2: memo-warm min-of-N under-reported the declared computation).
-TRAINED_QUERIES = frozenset(
-    {"quality_classifier_trained", "pq_recall_trained", "similarity_ivfpq_trained"}
-)
+# main()'s final stdout line is packed to this many chars so it fits
+# a 2000-char stdout tail window (see the end of main())
+TAIL_BUDGET = 1880
+
+
+def _trained(name: str) -> bool:
+    """QUERIES named `*_trained` build a model behind a per-sf_dir memo
+    (LR weights / IVF centroids / PQ codebooks). Their timed reps clear
+    the memos first so the bench row includes training (r14 verdict
+    item 2: memo-warm min-of-N under-reported the declared computation).
+    perfbench's `queries.trained_s` uses the same suffix rule."""
+    return name.endswith("_trained")
+
+
+def _sfval(x):
+    """Scale factors compare as floats: a payload stores sf=float('1')
+    =1.0 while a directory suffix reads '1'."""
+    try:
+        return float(x)
+    except (TypeError, ValueError):
+        return str(x)
 
 
 def _progress_stats(q, warmup_batches: int = 2) -> tuple[list[dict], list[dict]]:
@@ -72,6 +88,9 @@ def _steady_rate(steady: list[dict]) -> tuple[int, float, float]:
 # window minus 2 warmup batches leaves nothing when addBatch degrades
 # to 10-25 s, and a 1-batch "measurement" is noise).
 MIN_STEADY_BATCHES = 3
+# auto-extend cap: a window runs at most max(MAX_FACTOR x nominal,
+# nominal + 20 s)
+MAX_FACTOR = 2.5
 
 
 def _run_until_steady(
@@ -79,11 +98,10 @@ def _run_until_steady(
 ) -> tuple[list[dict], list[dict]]:
     """Sleep the nominal window, then AUTO-EXTEND until the query has
     produced >= min_steady steady-state batches or the hard cap
-    (factor x nominal, SPARK_GRAFT_STREAM_MAX_FACTOR, default 2.5) is
-    reached. Callers report `insufficient_batches` explicitly when the
-    cap fires first — never a rate derived from <min_steady batches."""
-    factor = float(os.environ.get("SPARK_GRAFT_STREAM_MAX_FACTOR", "2.5"))
-    max_seconds = max(seconds * factor, seconds + 20.0)
+    (MAX_FACTOR) is reached. Callers report `insufficient_batches`
+    explicitly when the cap fires first — never a rate derived from
+    <min_steady batches."""
+    max_seconds = max(seconds * MAX_FACTOR, seconds + 20.0)
     t0 = time.monotonic()
     time.sleep(seconds)
     while True:
@@ -186,536 +204,288 @@ def streaming_lines_per_sec(spark) -> float:
         shutil.rmtree(stage_dir, ignore_errors=True)
 
 
-def streaming_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained-rate run of the reference's real workload shape
-    (`src/worker/LabelWorker.java:464`: receive → label → forwards →
-    rtvals store): rate source → line synth → the SAME compiled
-    filter→math→generic path the replay bench uses → per-key running
-    aggregates in the Spark state store (applyInPandasWithState,
-    `streaming/stateful.py`) — a true streaming stateful operator, not
-    a foreachBatch loop. Runs ≥60 s (SPARK_GRAFT_STREAM_SECONDS) at an
-    offered SPARK_GRAFT_STREAM_RPS rows/s and reports steady-state
-    processed rows/s (first progress entries dropped as warmup),
-    whether the pipeline kept up with the offered rate, and the state
-    store row count — which must stay bounded at the key-space size
-    (2000 keys here; state is per-key, not per-row)."""
-    import shutil
-    import tempfile
+# ------------------------------------------------------------------ tiers
+# Each streaming tier is a (source, operator) pair over Spark's rate
+# source, read through the micro-batch progress contract
+# (recentProgress); one runner (_sustained) and one sweep (_capacity)
+# serve all of them.
 
+# the replay bench's compiled filter→math→generic path, with the uid
+# field the keyed tiers group on
+LABEL_PATH = {
+    "delimiter": ",",
+    "steps": [
+        {"type": "filter", "rules": [["start", "$EV"], ["minitems", "4"]]},
+        {"type": "math", "ops": [{"target": "i2", "formula": "i2*0.5"}]},
+        {
+            "type": "generic",
+            "fields": [
+                {"name": "etype", "index": 1, "dtype": "text"},
+                {"name": "val", "index": 2, "dtype": "real"},
+                {"name": "uid", "index": 3, "dtype": "int"},
+            ],
+            "keep": ["_rts"],
+        },
+    ],
+}
+
+
+def _label_events(src):
+    """Rate rows → `$EV` lines (5 event types × 400 uids = 2000 keys) →
+    LABEL_PATH: the reference's receive → label → forward shape
+    (`src/worker/LabelWorker.java:464`)."""
     from pyspark.sql import functions as F
 
     from dcafs_spark.plans.dsl import compile_path
+
+    lines = src.select(
+        F.col("timestamp").alias("_rts"),
+        F.concat_ws(
+            ",",
+            F.lit("$EV"),
+            F.concat(F.lit("t"), (F.col("value") % 5).cast("string")),
+            ((F.col("value") % 1000) / 7.0).cast("string"),
+            ((F.col("value") / 5).cast("long") % 400).cast("string"),
+        ).alias("value"),
+    )
+    return compile_path(lines, LABEL_PATH)[0]
+
+
+def _synth(col: str, sql: str):
+    """Source builder: (timestamp, <col> = sql over the rate `value`)."""
+
+    def build(src):
+        from pyspark.sql import functions as F
+
+        return src.select("timestamp", F.expr(sql).alias(col))
+
+    return build
+
+
+def _running_values(df):
+    """Per-key running aggregates in the Spark state store
+    (applyInPandasWithState, `streaming/stateful.py`) — a true
+    streaming stateful operator, not a foreachBatch loop."""
+    from pyspark.sql import functions as F
+
     from dcafs_spark.streaming.stateful import stateful_values
 
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_SECONDS", "60"))
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_RPS", "250000"))
-    ckpt = tempfile.mkdtemp(prefix="bench_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", 8)
-            .load()
-        )
-        lines = src.select(
-            F.col("timestamp").alias("_rts"),
-            F.concat_ws(
-                ",",
-                F.lit("$EV"),
-                F.concat(F.lit("t"), (F.col("value") % 5).cast("string")),
-                ((F.col("value") % 1000) / 7.0).cast("string"),
-                ((F.col("value") / 5).cast("long") % 400).cast("string"),
-            ).alias("value"),
-        )
-        main, _rej = compile_path(
-            lines,
-            {
-                "delimiter": ",",
-                "steps": [
-                    {"type": "filter", "rules": [["start", "$EV"], ["minitems", "4"]]},
-                    {"type": "math", "ops": [{"target": "i2", "formula": "i2*0.5"}]},
-                    {
-                        "type": "generic",
-                        "fields": [
-                            {"name": "etype", "index": 1, "dtype": "text"},
-                            {"name": "val", "index": 2, "dtype": "real"},
-                            {"name": "uid", "index": 3, "dtype": "int"},
-                        ],
-                        "keep": ["_rts"],
-                    },
-                ],
-            },
-        )
-        keyed = main.select(
-            "etype",
-            F.col("uid").cast("string").alias("uid"),
-            "val",
-            F.col("_rts").cast("double").alias("tsd"),
-        )
-        out = stateful_values(
-            keyed, history_n=10, group="etype", name="uid", value="val", ts="tsd"
-        )
-        q = (
-            out.writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_sustained")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        # micro-batch time breakdown (mean ms per steady batch) — names
-        # the bottleneck when a rate stops keeping up: addBatch is the
-        # state-store + Python-state-fn execution, getBatch/latestOffset
-        # are source-side, walCommit/commitOffsets are checkpoint I/O
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "state_bounded": bool(state_rows <= 2000),
-            # busy_sec = sum of batchDuration over RETAINED progress
-            # entries (recentProgress keeps only the newest ~100), i.e.
-            # micro-batch busy time over that window — NOT wall-clock
-            # run time; rows/rate above are computed over the same window
-            "busy_sec": round(sum(e["batchDuration"] for e in entries) / 1000.0, 1),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    keyed = df.select(
+        "etype",
+        F.col("uid").cast("string").alias("uid"),
+        "val",
+        F.col("_rts").cast("double").alias("tsd"),
+    )
+    return stateful_values(keyed, history_n=10, group="etype", name="uid", value="val", ts="tsd")
 
 
-def streaming_sustained_jvm(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Bottleneck-attribution control for the capacity knee: the SAME
-    rate source → line synth → compiled filter→math→generic path as
-    `streaming_sustained`, but the stateful stage is a pure-JVM
-    watermarked windowed aggregation (10 s tumbling window per
-    (etype, uid): count/avg/max) instead of the Python
-    applyInPandasWithState store. If this variant keeps up at the rate
-    where the Python path fails, the knee is the Arrow round-trip +
-    Python state function, not the engine's state store or the
-    filter/math/projection pipeline."""
-    import shutil
-    import tempfile
-
+def _windowed_agg(df):
+    """Pure-JVM control: watermarked 10 s tumbling window per
+    (etype, uid) — count/avg/max instead of the Python state fn."""
     from pyspark.sql import functions as F
 
-    from dcafs_spark.plans.dsl import compile_path
-
-    # 60 s default (was 30): at 1 M offered the windowed-agg batches
-    # run 15-20 s each, so a 30 s window leaves exactly 3 part-ramping
-    # steady batches and reads ~20% low (measured r13: 600k@30s vs
-    # 736k@60s, same code, idle box). The fresh-subprocess design
-    # makes the longer window affordable.
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_JVM_SECONDS", "60"))
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_JVM_RPS", "1000000"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_state_jvm_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", 8)
-            .load()
-        )
-        lines = src.select(
-            F.col("timestamp").alias("_rts"),
-            F.concat_ws(
-                ",",
-                F.lit("$EV"),
-                F.concat(F.lit("t"), (F.col("value") % 5).cast("string")),
-                ((F.col("value") % 1000) / 7.0).cast("string"),
-                ((F.col("value") / 5).cast("long") % 400).cast("string"),
-            ).alias("value"),
-        )
-        main, _rej = compile_path(
-            lines,
-            {
-                "delimiter": ",",
-                "steps": [
-                    {"type": "filter", "rules": [["start", "$EV"], ["minitems", "4"]]},
-                    {"type": "math", "ops": [{"target": "i2", "formula": "i2*0.5"}]},
-                    {
-                        "type": "generic",
-                        "fields": [
-                            {"name": "etype", "index": 1, "dtype": "text"},
-                            {"name": "val", "index": 2, "dtype": "real"},
-                            {"name": "uid", "index": 3, "dtype": "int"},
-                        ],
-                        "keep": ["_rts"],
-                    },
-                ],
-            },
-        )
-        out = (
-            main.withWatermark("_rts", "10 seconds")
-            .groupBy(F.window("_rts", "10 seconds"), "etype", "uid")
-            .agg(F.count(F.lit(1)).alias("n"), F.avg("val").alias("avg_val"), F.max("val").alias("max_val"))
-        )
-        q = (
-            out.writeStream.outputMode("update")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_sustained_jvm")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": _last_state_rows(entries),
-            "n_batches": len(steady),
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return (
+        df.withWatermark("_rts", "10 seconds")
+        .groupBy(F.window("_rts", "10 seconds"), "etype", "uid")
+        .agg(F.count(F.lit(1)).alias("n"), F.avg("val").alias("avg_val"), F.max("val").alias("max_val"))
+    )
 
 
-def streaming_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the banded-signature ingest dedup tier
-    (`streaming/dedup.py:streaming_minhash_bucket_dedup`): rate source
-    → synthesized ~12-word docs drawn from a bounded phrase space (so
-    mirror floods actually occur and the state store does real
-    first-wins work) → watermarked dropDuplicatesWithinWatermark on the
-    full banded signature → noop sink. The per-row cost here is the
-    map-side minhash fold (16 hashes over shingles), the heaviest
-    per-document expression in the streaming surface — this measures
-    the dedup tier's own keep-up rate, separate from the
-    filter→math→generic sustained run."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+def _minhash_dedup(df):
     from dcafs_spark.streaming.dedup import streaming_minhash_bucket_dedup
 
-    # ~1400 docs/s/core offered (45k on the 32-core driver box; was a
-    # flat 30k through round 9): the old 8-partition rate source capped
-    # the map-side signature stage at 8 cores — the tier capability
-    # read 28-48k and flapped with JVM pressure. A real ingest at these
-    # rates has source partitions >= cores (Kafka), and at 32/32 the
-    # measured capability is ~85k docs/s (~2.7k/core; keeps up at 60k,
-    # knee ~85k), so 1400/core ≈ 2x headroom even under end-of-bench
-    # JVM pressure — and the default scales with the actual core count
-    # instead of assuming this box.
-    cores = spark.sparkContext.defaultParallelism or 32
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_RPS", str(1400 * cores)))
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_dedup_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
-            .load()
-        )
-        # ~2000 distinct phrases of 12 words → heavy duplication within
-        # the watermark horizon, the flood the tier exists to absorb
-        docs = src.select(
-            "timestamp",
-            F.expr(
-                "concat_ws(' ', transform(sequence(0, 11),"
-                " i -> concat('tok', ((value % 2000) * 13 + i * i) % 997)))"
-            ).alias("text"),
-        )
-        dd = streaming_minhash_bucket_dedup(
-            docs, text_col="text", ts_col="timestamp", watermark="10 seconds"
-        )
-        q = (
-            dd.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_dedup_tier")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return streaming_minhash_bucket_dedup(df, text_col="text", ts_col="timestamp", watermark="10 seconds")
 
 
-def streaming_embedding_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the embedding-bucket ingest dedup tier
-    (`streaming/dedup.py:streaming_embedding_bucket_dedup`): rate
-    source → synthesized 64-dim vectors from a bounded family (so
-    re-encoded mirror floods occur and first-wins does real work) →
-    sign-LSH bucket (12 planes ≈ ⌈log2 500⌉ + 3) + watermarked
-    dropDuplicatesWithinWatermark → noop. Per-row cost is the H×dim
-    bucket fold (~768 mults) — heavier than the minhash tier's
-    shingle fold, so the default offer is lower (800 docs/s/core vs
-    1400). Fresh-process knee since the r12 lsh_bucket rewrite:
-    keeps up through 153.6k docs/s (4.8k/core), breaks at 204.8k
-    (194.6k sustained)."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+def _embedding_dedup(df):
     from dcafs_spark.operators.similarity import hyperplanes
     from dcafs_spark.streaming.dedup import streaming_embedding_bucket_dedup
 
-    cores = spark.sparkContext.defaultParallelism or 32
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_EMBDEDUP_RPS", str(800 * cores)))
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_embdedup_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
-            .load()
-        )
-        # 500 distinct base vectors → heavy mirror duplication within
-        # the horizon; per-row jitter stays far below a sign flip
-        vecs = src.select(
-            "timestamp",
-            F.expr(
-                "transform(sequence(0, 63),"
-                " i -> cos(double(value % 500) * 7.0 + double(i) * 1.3)"
-                "      + double(value % 7) * 1e-9)"
-            ).alias("embedding"),
-        )
-        dd = streaming_embedding_bucket_dedup(
-            vecs, hyperplanes(64, 12, 42), ts_col="timestamp", watermark="10 seconds"
-        )
-        q = (
-            dd.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_embdedup_tier")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return streaming_embedding_bucket_dedup(
+        df, hyperplanes(64, 12, 42), ts_col="timestamp", watermark="10 seconds"
+    )
 
 
-def streaming_url_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the canonical-URL ingest dedup tier
-    (`streaming/dedup.py:streaming_url_dedup`, r12 verdict ask #5):
-    rate source → synthesized raw URLs with the batch fixture's
-    variant structure (case/www/port/utm/fragment spellings of ~2000
-    page identities, so re-fetch floods actually occur) → watermarked
-    first-wins on the canonical md5 → noop. Per-row cost is the
-    canonicalization regexp chain — lighter than the minhash fold, so
-    the default offer sits higher (2000 docs/s/core = 64k on this
-    box). Idle fresh-process sweep (r13): keeps up at EVERY measured
-    rung through 1.5M docs/s (46.9k/core, addBatch 1.5 s/batch) —
-    the tier rides the engine's raw micro-batch ceiling, not its own
-    expression cost; the modest default exists for in-suite co-load
-    robustness only."""
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
+def _url_dedup(df):
     from dcafs_spark.streaming.dedup import streaming_url_dedup
 
-    cores = spark.sparkContext.defaultParallelism or 32
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_URLDEDUP_RPS", str(2000 * cores)))
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_urldedup_state_")
-    try:
-        src = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
-            .load()
-        )
-        # ~2000 page identities; spelling variants ride value % 4
-        urls = src.select(
-            "timestamp",
-            F.expr(
-                "concat("
-                " CASE WHEN value % 4 = 0 THEN 'HTTPS://WWW.' ELSE 'https://' END,"
-                " 'site', CAST(value % 50 AS STRING), '.example.com',"
-                " CASE WHEN value % 4 = 1 THEN ':443' ELSE '' END,"
-                " '/p/', CAST((value % 2000) DIV 50 AS STRING),"
-                " CASE WHEN value % 4 = 2 THEN '/?utm_source=feed' ELSE '' END,"
-                " CASE WHEN value % 4 = 3 THEN '#frag' ELSE '' END)"
-            ).alias("url"),
-        )
-        dd = streaming_url_dedup(
-            urls, url_col="url", ts_col="timestamp", watermark="10 seconds"
-        )
-        q = (
-            dd.writeStream.outputMode("append")
-            .format("noop")
-            .option("checkpointLocation", ckpt)
-            .queryName("bench_urldedup_tier")
-            .start()
-        )
-        try:
-            entries, steady = _run_until_steady(q, seconds)
-        finally:
-            q.stop()
-            q.awaitTermination(15)
-        if len(steady) < MIN_STEADY_BATCHES:
-            return _insufficient(entries, steady)
-        _rows, _busy, rate = _steady_rate(steady)
-        state_rows = _last_state_rows(entries)
-        durs: dict[str, float] = {}
-        for e in steady:
-            for k, v in (e.get("durationMs") or {}).items():
-                durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
-            "sustained_rows_per_sec": round(rate, 1),
-            "offered_rows_per_sec": rps,
-            "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
-            "n_batches": len(steady),
-            "durations_ms": durs,
-        }
-    finally:
-        shutil.rmtree(ckpt, ignore_errors=True)
+    return streaming_url_dedup(df, url_col="url", ts_col="timestamp", watermark="10 seconds")
 
 
-def streaming_paragraph_dedup_sustained(spark, rps: int | None = None, seconds: float | None = None) -> dict:
-    """Sustained run of the paragraph ingest dedup tier
-    (`streaming/dedup.py:streaming_paragraph_dedup`, r12 verdict ask
-    #5): rate source → synthesized 3-paragraph docs from a bounded
-    phrase space (template floods occur, novel tails pass) → explode
-    to paragraphs + watermarked first-wins on the 60-bit chash → noop.
-    Per-row cost is normalize + split + 3 md5 chunk hashes and a 3x
-    row expansion — the heaviest of the ingest tiers. Idle
-    fresh-process sweep (r13): keeps up through 96k docs/s (3k/core,
-    91.8k sustained = 95.6% of offered), capability plateaus at
-    ~99-101k with the knee between 96k and 128k (addBatch
-    8.9 s/batch at 128k — chunk-hash fold + state commit). The
-    default offer is 500/core (16k here) for in-suite co-load
-    headroom, the same capability-vs-keep-up split the minhash tier
-    uses. Rates are DOCS offered/s; the reported sustained rate is
-    docs/s (input rows), not exploded paragraph rows."""
+def _paragraph_dedup(df):
+    from dcafs_spark.streaming.dedup import streaming_paragraph_dedup
+
+    return streaming_paragraph_dedup(
+        df, text_col="text", chunk_words=20, ts_col="timestamp", watermark="10 seconds"
+    )
+
+
+@dataclass(frozen=True)
+class Sweep:
+    """Capacity sweep: offered rates above the keep-up default, one
+    window per rung (each rung re-measured once if missed)."""
+
+    key: str  # tail `streams` key
+    section: str  # BENCH_DETAIL.json section
+    rates: tuple[int, ...]  # same unit as the tier's offer
+    seconds: float
+    note: str  # what addBatch is on this tier, named when it is the knee
+
+
+@dataclass(frozen=True)
+class Tier:
+    section: str  # BENCH_DETAIL.json section of the keep-up run
+    source: Callable  # rate-source DataFrame -> input rows
+    operator: Callable  # input rows -> the streaming DataFrame under test
+    offer: int  # default offered rows/s; per core when per_core
+    # per_core: offers scale with the core count and the rate source
+    # has one partition per core (a Kafka-like ingest with partitions
+    # >= cores — an 8-partition source capped the minhash signature
+    # stage at 8 cores and the tier flapped 28-48k); else 8 partitions
+    per_core: bool = True
+    seconds: float = 30.0  # default window
+    mode: str = "append"
+    state_bound: int | None = None  # key-space size the state must stay within
+    sweep: Sweep | None = None
+
+
+# tail `streams` key -> tier
+TIERS: dict[str, Tier] = {
+    # Label path into executor-side per-key state; state must stay at
+    # the 2000-key space (state is per-key, not per-row). Knee:
+    # addBatch (state store + Python state fn) dominates past 500k.
+    "sustained": Tier(
+        "streaming_sustained", _label_events, _running_values, 250_000,
+        per_core=False, seconds=60.0, mode="update", state_bound=2000,
+        sweep=Sweep("capacity", "streaming_capacity", (500_000, 1_000_000), 30.0,
+                    "state-store + Python state fn"),
+    ),
+    # Bottleneck-attribution control for the label-path knee: if this
+    # keeps up where the Python path fails, the knee is the Arrow
+    # round-trip + Python state fn, not the state store or the path.
+    # 60 s window: at 1M offered its batches run 15-20 s, and a 30 s
+    # window leaves 3 part-ramping steady batches and reads ~20% low
+    # (r13: 600k@30s vs 736k@60s, same code, idle box).
+    "jvm": Tier(
+        "streaming_sustained_jvm", _label_events, _windowed_agg, 1_000_000,
+        per_core=False, seconds=60.0, mode="update",
+    ),
+    # Banded-minhash first-wins over ~12-word docs from ~2000 phrases
+    # (real flood duplication within the horizon); per-row cost is the
+    # 16-hash shingle fold. 1400/core ≈ 2x headroom under end-of-bench
+    # co-load (capability ~2.7k/core at 32 cores). Clean-JVM sweep (r11,
+    # 32 cores): keeps up at 1875/3750/5000 per core, breaks at 6250
+    # (addBatch 5.3 s/batch). Rungs need ≥45 s: the first 2-3 batches
+    # compile the minhash codegen at 7-8 s/batch and are dropped as
+    # warmup, so a 25 s rung leaves one still-ramping batch.
+    "dedup": Tier(
+        "streaming_dedup_tier",
+        _synth("text", "concat_ws(' ', transform(sequence(0, 11),"
+                       " i -> concat('tok', ((value % 2000) * 13 + i * i) % 997)))"),
+        _minhash_dedup, 1400,
+        sweep=Sweep("dedup_capacity", "streaming_dedup_capacity", (1875, 3750, 5000, 6250), 45.0,
+                    "map-side minhash fold + state-store commit"),
+    ),
+    # Sign-LSH (12 planes) first-wins over 64-dim vectors from 500 base
+    # vectors (per-row jitter far below a sign flip). The H×dim fold
+    # (~768 mults) is heavier than the shingle fold, hence 800/core.
+    # Fresh-process knee since the r12 lsh_bucket rewrite: keeps up
+    # through 4.8k/core, breaks at 6.4k/core. The sweep runs only via
+    # `bench.py --stream-embdedup`.
+    "embdedup": Tier(
+        "streaming_embedding_dedup_tier",
+        _synth("embedding", "transform(sequence(0, 63),"
+                            " i -> cos(double(value % 500) * 7.0 + double(i) * 1.3)"
+                            "      + double(value % 7) * 1e-9)"),
+        _embedding_dedup, 800,
+        sweep=Sweep("embdedup_capacity", "streaming_embedding_dedup_capacity",
+                    (1600, 3200, 4800, 6400), 45.0, "sign-LSH bucket fold + state-store commit"),
+    ),
+    # Canonical-URL first-wins over case/www/port/utm/fragment spellings
+    # of ~2000 page identities. Idle fresh-process sweep (r13): keeps up
+    # at every rung through 46.9k/core — the tier rides the engine's raw
+    # micro-batch ceiling; the modest offer is co-load headroom only.
+    "urldedup": Tier(
+        "streaming_url_dedup_tier",
+        _synth("url", "concat("
+                      " CASE WHEN value % 4 = 0 THEN 'HTTPS://WWW.' ELSE 'https://' END,"
+                      " 'site', CAST(value % 50 AS STRING), '.example.com',"
+                      " CASE WHEN value % 4 = 1 THEN ':443' ELSE '' END,"
+                      " '/p/', CAST((value % 2000) DIV 50 AS STRING),"
+                      " CASE WHEN value % 4 = 2 THEN '/?utm_source=feed' ELSE '' END,"
+                      " CASE WHEN value % 4 = 3 THEN '#frag' ELSE '' END)"),
+        _url_dedup, 2000,
+    ),
+    # Paragraph first-wins on the 60-bit chash over 3×20-word docs: one
+    # boilerplate paragraph on value%7==0 docs (the template flood), two
+    # from a ~3000-phrase space. Heaviest ingest tier (normalize + split
+    # + 3 md5 chunk hashes, 3x row expansion); rates are docs/s, not
+    # paragraph rows. Idle fresh-process sweep (r13): keeps up through
+    # 3k/core, knee between 3k and 4k/core (addBatch 8.9 s/batch); the
+    # 500/core offer is in-suite co-load headroom, the same
+    # capability-vs-keep-up split as the minhash tier.
+    "paradedup": Tier(
+        "streaming_paragraph_dedup_tier",
+        _synth("text", "concat_ws(' ',"
+                       " CASE WHEN value % 7 = 0"
+                       "   THEN concat_ws(' ', transform(sequence(0, 19), i -> concat('boil', i)))"
+                       "   ELSE concat_ws(' ', transform(sequence(0, 19),"
+                       "        i -> concat('tok', ((value % 3000) * 17 + i) % 1009))) END,"
+                       " concat_ws(' ', transform(sequence(0, 19),"
+                       "      i -> concat('mid', ((value % 3000) * 29 + i * i) % 1013))),"
+                       " concat_ws(' ', transform(sequence(0, 19),"
+                       "      i -> concat('end', ((value % 3000) * 31 + i * 7) % 1019))))"),
+        _paragraph_dedup, 500,
+    ),
+}
+SWEEPS = {t.sweep.key: tier for tier, t in TIERS.items() if t.sweep}
+# main()'s streaming sections, in tail order (the embedding sweep is
+# flag-only)
+MAIN_STREAMS = ("sustained", "capacity", "jvm", "dedup", "embdedup", "urldedup", "paradedup", "dedup_capacity")
+SECTIONS = {k: t.section for k, t in TIERS.items()} | {
+    t.sweep.key: t.sweep.section for t in TIERS.values() if t.sweep
+}
+SWEEP_RUNG_KEYS = ("sustained_rows_per_sec", "kept_up", "state_rows", "n_batches", "durations_ms")
+
+
+def _scale(spark, tier: Tier) -> int:
+    return (spark.sparkContext.defaultParallelism or 32) if tier.per_core else 1
+
+
+def _sustained(spark, tier: str, rps: int | None = None, seconds: float | None = None) -> dict:
+    """Keep-up run of one tier at `rps` offered rows/s (default: the
+    tier's offer) for a `seconds` window (default: the tier's),
+    auto-extended to >= MIN_STEADY_BATCHES steady batches. Reports the
+    steady-state processed rate, whether it kept up (>= 95% of
+    offered), the state-store row count and the mean per-batch
+    durationMs breakdown — which names the bottleneck when a rate stops
+    keeping up: addBatch is operator + state-store execution,
+    getBatch/latestOffset are source-side, walCommit/commitOffsets are
+    checkpoint I/O."""
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F
-
-    from dcafs_spark.streaming.dedup import streaming_paragraph_dedup
-
-    cores = spark.sparkContext.defaultParallelism or 32
-    if rps is None:
-        rps = int(os.environ.get("SPARK_GRAFT_STREAM_PARADEDUP_RPS", str(500 * cores)))
-    if seconds is None:
-        seconds = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SECONDS", "30"))
-    if rps <= 0:
-        return {}
-    ckpt = tempfile.mkdtemp(prefix="bench_paradedup_state_")
+    t = TIERS[tier]
+    scale = _scale(spark, t)
+    rps = rps or t.offer * scale
+    ckpt = tempfile.mkdtemp(prefix=f"bench_{tier}_state_")
     try:
         src = (
             spark.readStream.format("rate")
             .option("rowsPerSecond", rps)
-            .option("numPartitions", cores)
+            .option("numPartitions", scale if t.per_core else 8)
             .load()
         )
-        # 3 paragraphs x 20 words: one boilerplate paragraph shared by
-        # value%7==0 docs (the template flood), two from a ~3000-phrase
-        # space (dups within the horizon, novel content dominates)
-        docs = src.select(
-            "timestamp",
-            F.expr(
-                "concat_ws(' ',"
-                " CASE WHEN value % 7 = 0"
-                "   THEN concat_ws(' ', transform(sequence(0, 19), i -> concat('boil', i)))"
-                "   ELSE concat_ws(' ', transform(sequence(0, 19),"
-                "        i -> concat('tok', ((value % 3000) * 17 + i) % 1009))) END,"
-                " concat_ws(' ', transform(sequence(0, 19),"
-                "      i -> concat('mid', ((value % 3000) * 29 + i * i) % 1013))),"
-                " concat_ws(' ', transform(sequence(0, 19),"
-                "      i -> concat('end', ((value % 3000) * 31 + i * 7) % 1019))))"
-            ).alias("text"),
-        )
-        dd = streaming_paragraph_dedup(
-            docs, text_col="text", chunk_words=20, ts_col="timestamp", watermark="10 seconds"
-        )
         q = (
-            dd.writeStream.outputMode("append")
+            t.operator(t.source(src))
+            .writeStream.outputMode(t.mode)
             .format("noop")
             .option("checkpointLocation", ckpt)
-            .queryName("bench_paradedup_tier")
+            .queryName(f"bench_{tier}")
             .start()
         )
         try:
-            entries, steady = _run_until_steady(q, seconds)
+            entries, steady = _run_until_steady(q, seconds or t.seconds)
         finally:
             q.stop()
             q.awaitTermination(15)
@@ -727,78 +497,47 @@ def streaming_paragraph_dedup_sustained(spark, rps: int | None = None, seconds: 
         for e in steady:
             for k, v in (e.get("durationMs") or {}).items():
                 durs[k] = durs.get(k, 0.0) + float(v)
-        durs = {k: round(v / len(steady), 1) for k, v in durs.items()}
-        return {
+        out = {
             "sustained_rows_per_sec": round(rate, 1),
             "offered_rows_per_sec": rps,
             "kept_up": bool(rate >= 0.95 * rps),
-            "state_rows": int(state_rows),
+            "state_rows": state_rows,
+            # busy_sec = sum of batchDuration over RETAINED progress
+            # entries (recentProgress keeps only the newest ~100), i.e.
+            # micro-batch busy time over that window — NOT wall-clock
+            # run time
+            "busy_sec": round(sum(e["batchDuration"] for e in entries) / 1000.0, 1),
             "n_batches": len(steady),
-            "durations_ms": durs,
+            "durations_ms": {k: round(v / len(steady), 1) for k, v in durs.items()},
         }
+        if t.state_bound is not None:
+            out["state_bounded"] = state_rows <= t.state_bound
+        return out
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def streaming_dedup_capacity(spark) -> dict:
-    """Measured knee for the ingest-dedup tier (r10 verdict ask #7):
-    sweep offered docs/s ABOVE the keep-up default until the tier
-    stops keeping up, and name the dominant micro-batch component at
-    the first failing offer. COVERAGE documents ~85k docs/s capability
-    at cores-many source partitions on the 32-core box; the default
-    sweep (60k, 90k, 120k) brackets that claim so the tier has a
-    measured knee like the label path does. Rates scale with the
-    actual core count via SPARK_GRAFT_STREAM_DEDUP_SWEEP; empty
-    disables.
-
-    Run via `bench.py --stream-dedup` in a FRESH process by main():
-    measured in-suite (after ~20 min of accumulated JVM/GC pressure)
-    the same sweep reads every rung failing with addBatch 5x its
-    fresh-session time — the same end-of-session artifact class
-    drift_recheck adjudicates for batch queries, so the knee, a
-    CAPABILITY metric, is measured in a clean JVM and reported with
-    `isolated: true`. The in-suite streaming_dedup_tier keep-up run
-    stays in-suite (it measures the tier in realistic co-load)."""
-    cores = spark.sparkContext.defaultParallelism or 32
-    # 60k/120k/160k/200k at 32 cores. Clean-JVM measurements (r11):
-    # keeps up at 60k (66.0k), 120k (114.1k) and 160k (160.8k ≈ 5000
-    # docs/s/core), breaks at 200k (169.6k sustained, addBatch
-    # 5.3 s/batch) — the knee is between 160k and 200k. Runs must be
-    # ≥45 s: the first 2-3 batches compile the minhash codegen at
-    # 7-8 s/batch and are dropped as warmup, so a 25 s run leaves a
-    # single still-ramping steady batch and reads 2x low.
-    default = (
-        f"{int(1875 * cores)},{int(3750 * cores)},{int(5000 * cores)},{int(6250 * cores)}"
-    )
-    sweep_env = os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP", default)
-    if not sweep_env.strip():
-        return {}
-    rates = [int(r) for r in sweep_env.split(",") if r.strip()]
-    per_rate_sec = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP_SECONDS", "45"))
+def _capacity(spark, tier: str) -> dict:
+    """Measured knee of one tier: run each sweep rung, report the max
+    offered rate kept up with and, at the first failing rung, the
+    dominant micro-batch component (triggerExecution is the whole-batch
+    total, so the largest COMPONENT is named instead)."""
+    t = TIERS[tier]
+    sw = t.sweep
     out: dict = {"rates": {}}
-    max_kept = 0
-    knee = None
-    for rps in rates:
-        r = _retry_if_missed(
-            lambda rps=rps: streaming_dedup_sustained(spark, rps=rps, seconds=per_rate_sec)
-        )
-        out["rates"][str(rps)] = {
-            k: r.get(k)
-            for k in ("sustained_rows_per_sec", "kept_up", "state_rows", "n_batches", "durations_ms")
-        }
+    max_kept, knee = 0, None
+    for rps in (r * _scale(spark, t) for r in sw.rates):
+        r = _retry_if_missed(lambda rps=rps: _sustained(spark, tier, rps, sw.seconds))
+        out["rates"][str(rps)] = {k: r.get(k) for k in SWEEP_RUNG_KEYS}
         if r.get("kept_up"):
             max_kept = max(max_kept, rps)
         elif knee is None:
             knee = rps
-            durs = {
-                k: v
-                for k, v in (r.get("durations_ms") or {}).items()
-                if k != "triggerExecution"
-            }
+            durs = {k: v for k, v in (r.get("durations_ms") or {}).items() if k != "triggerExecution"}
             if durs:
                 top = max(durs, key=durs.get)
                 out["knee_bottleneck"] = f"{top} ({durs[top]:.0f} ms/batch avg)" + (
-                    " — map-side minhash fold + state-store commit" if top == "addBatch" else ""
+                    f" — {sw.note}" if top == "addBatch" else ""
                 )
     out["max_kept_up_rps"] = max_kept
     if knee is not None:
@@ -806,142 +545,70 @@ def streaming_dedup_capacity(spark) -> dict:
     return out
 
 
-def streaming_embedding_dedup_capacity(spark) -> dict:
-    """Measured knee for the embedding-bucket ingest tier, mirroring
-    streaming_dedup_capacity: sweep offered docs/s above the keep-up
-    default (800/core) until the tier stops keeping up and name the
-    dominant micro-batch component at the first failing offer. Run
-    via `bench.py --stream-embdedup` in a FRESH process (same
-    clean-JVM rationale as the minhash sweep). Rates override via
-    SPARK_GRAFT_STREAM_EMBDEDUP_SWEEP; empty disables."""
-    cores = spark.sparkContext.defaultParallelism or 32
-    default = (
-        f"{int(1600 * cores)},{int(3200 * cores)},{int(4800 * cores)},{int(6400 * cores)}"
-    )
-    sweep_env = os.environ.get("SPARK_GRAFT_STREAM_EMBDEDUP_SWEEP", default)
-    if not sweep_env.strip():
-        return {}
-    rates = [int(r) for r in sweep_env.split(",") if r.strip()]
-    per_rate_sec = float(os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP_SECONDS", "45"))
-    out: dict = {"rates": {}}
-    max_kept = 0
-    knee = None
-    for rps in rates:
-        r = _retry_if_missed(
-            lambda rps=rps: streaming_embedding_dedup_sustained(spark, rps=rps, seconds=per_rate_sec)
-        )
-        out["rates"][str(rps)] = {
-            k: r.get(k)
-            for k in ("sustained_rows_per_sec", "kept_up", "state_rows", "n_batches", "durations_ms")
-        }
-        if r.get("kept_up"):
-            max_kept = max(max_kept, rps)
-        elif knee is None:
-            knee = rps
-            durs = {
-                k: v
-                for k, v in (r.get("durations_ms") or {}).items()
-                if k != "triggerExecution"
-            }
-            if durs:
-                top = max(durs, key=durs.get)
-                out["knee_bottleneck"] = f"{top} ({durs[top]:.0f} ms/batch avg)" + (
-                    " — sign-LSH bucket fold + state-store commit" if top == "addBatch" else ""
-                )
-    out["max_kept_up_rps"] = max_kept
-    if knee is not None:
-        out["first_failing_rps"] = knee
-    return out
-
-
-def stream_embdedup_isolated() -> dict:
-    """Fresh-process entry for the embedding-tier capacity sweep."""
-    from dcafs_spark import get_spark
-
-    spark = get_spark("dcafs_spark_bench_embdedup")
-    spark.sparkContext.setLogLevel("ERROR")
-    out = streaming_embedding_dedup_capacity(spark)
-    out["isolated"] = True
-    for q in spark.streams.active:
-        try:
-            q.stop()
-        except Exception:
-            pass
-    spark.stop()
-    return out
-
-
-def stream_dedup_isolated() -> dict:
-    """Fresh-process entry for the dedup capacity sweep (own JVM)."""
-    from dcafs_spark import get_spark
-
-    spark = get_spark("dcafs_spark_bench_dedup")
-    spark.sparkContext.setLogLevel("ERROR")
-    out = streaming_dedup_capacity(spark)
-    out["isolated"] = True
-    for q in spark.streams.active:
-        try:
-            q.stop()
-        except Exception:
-            pass
-    spark.stop()
-    return out
-
-
-def stream_main_isolated() -> dict:
-    """Fresh-process entry for the label-path streaming sections (r12
-    verdict ask #1): the official artifacts carried a broken JVM
-    control (1 steady batch in the builder's run, 0 in the driver's)
-    and a sustained section 4-5x below round 11, both measured after
-    ~15 min of accumulated suite JVM pressure. The sustained run, the
-    capacity sweep and the pure-JVM control now run in their own clean
-    JVM — the same treatment the dedup capacity sweeps got in r10/r11
-    — with the >=3-steady-batch auto-extend guaranteeing every
-    kept_up/knee verdict rests on a real window."""
-    from dcafs_spark import get_spark
-
-    spark = get_spark("dcafs_spark_bench_stream")
-    spark.sparkContext.setLogLevel("ERROR")
-    out = {
-        "streaming_sustained": _retry_if_missed(lambda: streaming_sustained(spark)),
-        "streaming_capacity": streaming_capacity(spark),
-        "streaming_sustained_jvm": streaming_sustained_jvm(spark),
-        "isolated": True,
-    }
-    for q in spark.streams.active:
-        try:
-            q.stop()
-        except Exception:
-            pass
-    spark.stop()
-    return out
-
-
-def run_stream_main_subprocess() -> dict:
-    """Spawn `bench.py --stream-main` and parse its one JSON line.
-    SPARK_GRAFT_STREAM_ISOLATED=0 falls back to in-suite execution
-    (used by the quick iteration loop, where a second JVM is slower
-    than the co-load noise it avoids)."""
+def _spawn_json(argv: list[str], timeout: float) -> dict:
+    """Run `bench.py *argv` in a fresh process (own JVM: none of the
+    accumulated suite JVM/GC pressure) and parse the last JSON line of
+    its stdout; {} if it fails to report."""
     import subprocess
 
     try:
         run = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--stream-main"],
+            [sys.executable, os.path.abspath(__file__), *argv],
             capture_output=True,
             text=True,
-            timeout=1800,
-            env=dict(os.environ),
+            timeout=timeout,
+            env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
         )
         for ln in reversed(run.stdout.splitlines()):
             if ln.strip().startswith("{"):
                 return json.loads(ln)
     except Exception:
         pass
-    return {"err": "isolated stream-main run failed to report"}
+    return {}
+
+
+def _fresh_streams(app: str, run: Callable, *args) -> dict:
+    """Body of a `--stream-*` fresh-process entry: run(spark, *args) in
+    its own session, then stop every stream and the session."""
+    from dcafs_spark import get_spark
+
+    spark = get_spark(app)
+    spark.sparkContext.setLogLevel("ERROR")
+    out = run(spark, *args)
+    for q in spark.streams.active:
+        try:
+            q.stop()
+        except Exception:
+            pass
+    spark.stop()
+    return out
+
+
+def stream_main_isolated(spark) -> dict:
+    """`--stream-main`: the label-path sections (sustained run, its
+    capacity sweep, the pure-JVM control) in their own clean JVM (r12
+    verdict ask #1: measured in-suite after ~15 min of accumulated JVM
+    pressure, the control collapsed to 0-1 steady batches and the
+    sustained rate read 4-5x below round 11)."""
+    return {
+        SECTIONS["sustained"]: _retry_if_missed(lambda: _sustained(spark, "sustained")),
+        SECTIONS["capacity"]: _capacity(spark, "sustained"),
+        SECTIONS["jvm"]: _sustained(spark, "jvm"),
+        "isolated": True,
+    }
+
+
+def stream_capacity_isolated(spark, tier: str) -> dict:
+    """`--stream-dedup` / `--stream-embdedup`: a tier's capacity sweep.
+    It always runs in a clean JVM: measured in-suite (after ~20 min of
+    accumulated JVM/GC pressure) every rung of the same sweep fails
+    with addBatch 5x its fresh-session time, and the knee is a
+    CAPABILITY metric."""
+    return {**_capacity(spark, tier), "isolated": True}
 
 
 def run_dedup_capacity_subprocess() -> dict:
-    """Spawn `bench.py --stream-dedup` and parse its one JSON line.
+    """`bench.py --stream-dedup` in a fresh process.
 
     Retries ONCE in a second fresh process when EVERY rung fails
     (max_kept_up_rps == 0): the r14 root-cause analysis showed ~1 in 8
@@ -952,26 +619,11 @@ def run_dedup_capacity_subprocess() -> dict:
     through 160k. Both draws are recorded (`slow_jvm_first_draw`), the
     better one is the capability verdict — the same two-draw rule
     drift_recheck already applies to batch queries."""
-    import subprocess
-
-    if not os.environ.get("SPARK_GRAFT_STREAM_DEDUP_SWEEP", "x").strip():
-        return {}
 
     def _one_run() -> dict:
-        try:
-            run = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--stream-dedup"],
-                capture_output=True,
-                text=True,
-                timeout=900,
-                env=dict(os.environ),
-            )
-            for ln in reversed(run.stdout.splitlines()):
-                if ln.strip().startswith("{"):
-                    return json.loads(ln)
-        except Exception:
-            pass
-        return {"err": "isolated dedup capacity run failed to report"}
+        return _spawn_json(["--stream-dedup"], 900) or {
+            "err": "isolated dedup capacity run failed to report"
+        }
 
     out = _one_run()
     if out.get("rates") and not out.get("max_kept_up_rps"):
@@ -984,60 +636,6 @@ def run_dedup_capacity_subprocess() -> dict:
         if retry.get("max_kept_up_rps"):
             retry["slow_jvm_first_draw"] = first
             return retry
-    return out
-
-
-def streaming_capacity(spark) -> dict:
-    """Capacity knee: sweep offered rates above the sustained-run
-    baseline and report the max rate the stateful pipeline keeps up
-    with (≥95% of offered) plus the named bottleneck at the first
-    failing rate — from the micro-batch durationMs breakdown, where
-    `addBatch` is state-store + Python-state-fn execution and the
-    offset/commit entries are checkpoint I/O. Rates and per-rate run
-    length come from SPARK_GRAFT_STREAM_SWEEP / _SWEEP_SECONDS; an
-    empty sweep list disables the section."""
-    sweep_env = os.environ.get("SPARK_GRAFT_STREAM_SWEEP", "500000,1000000")
-    if not sweep_env.strip():
-        return {}
-    rates = [int(r) for r in sweep_env.split(",") if r.strip()]
-    per_rate_sec = float(os.environ.get("SPARK_GRAFT_STREAM_SWEEP_SECONDS", "30"))
-    out: dict = {"rates": {}}
-    max_kept = 0
-    knee = None
-    for rps in rates:
-        r = _retry_if_missed(
-            lambda rps=rps: streaming_sustained(spark, rps=rps, seconds=per_rate_sec)
-        )
-        out["rates"][str(rps)] = {
-            k: r.get(k)
-            for k in (
-                "sustained_rows_per_sec",
-                "kept_up",
-                "state_rows",
-                "n_batches",
-                "durations_ms",
-            )
-        }
-        if r.get("kept_up"):
-            max_kept = max(max_kept, rps)
-        elif knee is None:
-            knee = rps
-            # triggerExecution is the whole-batch total — name the
-            # dominant COMPONENT instead
-            durs = {
-                k: v
-                for k, v in (r.get("durations_ms") or {}).items()
-                if k != "triggerExecution"
-            }
-            if durs:
-                top = max(durs, key=durs.get)
-                out["knee_bottleneck"] = (
-                    f"{top} ({durs[top]:.0f} ms/batch avg)"
-                    + (" — state-store + Python state fn" if top == "addBatch" else "")
-                )
-    out["max_kept_up_rps"] = max_kept
-    if knee is not None:
-        out["first_failing_rps"] = knee
     return out
 
 
@@ -1093,7 +691,7 @@ def quick_bench(names: list[str] | None = None) -> dict:
         fn = QUERIES[name][0]
         best = float("inf")
         for _ in range(2):
-            if name in TRAINED_QUERIES:  # same cold-rep rule as main()
+            if _trained(name):  # same cold-rep rule as main()
                 clear_training_memos()
             t0 = time.perf_counter()
             fn(spark, big).write.format("noop").mode("overwrite").save()
@@ -1141,7 +739,7 @@ def isolated_remeasure(names: list[str]) -> dict[str, float]:
         ).mode("overwrite").save()
         best = float("inf")
         for _ in range(2):
-            if name in TRAINED_QUERIES:  # same cold-rep rule as main()
+            if _trained(name):  # same cold-rep rule as main()
                 clear_training_memos()
             t0 = time.perf_counter()
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
@@ -1185,18 +783,7 @@ def drift_recheck(
     flapped ~2x with session JVM pressure on untouched code; the
     isolated number (a clean JVM, like the judge's manual re-measure)
     is what separates environment drift from a real regression."""
-    import subprocess
-
-    if os.environ.get("SPARK_GRAFT_DRIFT_RECHECK", "1") == "0":
-        return {}
     prev = _prev_round_detail(repo_dir, detail_path)
-
-    def _sfval(x):
-        try:
-            return float(x)
-        except (TypeError, ValueError):
-            return str(x)
-
     if not prev or not prev.get("control_sec") or _sfval(prev.get("sf")) != _sfval(sf):
         return {}
     env = control_sec / prev["control_sec"] if prev["control_sec"] > 0 else 1.0
@@ -1219,23 +806,7 @@ def drift_recheck(
     names = [n for _r, n in sorted(flagged, reverse=True)][:8]
     if not names:
         return {}
-    def _iso_run(run_names: list[str]) -> dict:
-        try:
-            run = subprocess.run(
-                [sys.executable, os.path.abspath(__file__), "--isolated", *run_names],
-                capture_output=True,
-                text=True,
-                timeout=600,
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
-            )
-            for ln in reversed(run.stdout.splitlines()):
-                if ln.strip().startswith("{"):
-                    return json.loads(ln)
-        except Exception:
-            pass
-        return {}
-
-    iso = _iso_run(names)
+    iso = _spawn_json(["--isolated", *names], 600)
     # r14 root-cause (dedup_simhash bimodality): a per-JVM C2-compile
     # lottery — roughly 1 in 8 fresh JVMs never lands the optimized
     # compile of the deepest interpreted-HOF chain (~20x slower eval,
@@ -1254,7 +825,7 @@ def drift_recheck(
         and env > 0
         and (iso[n] / prev_q[n]) / env > (1.4 if n in front else 2.0)
     ]
-    iso2 = _iso_run(retry) if retry else {}
+    iso2 = _spawn_json(["--isolated", *retry], 600) if retry else {}
     out = {}
     for name in names:
         p = prev_q[name]
@@ -1312,7 +883,7 @@ def main() -> None:
         # model. A final memo-warm rep is recorded separately in
         # trained_warm_sec for round-over-round comparability with the
         # pre-r15 rows.
-        trained = name in TRAINED_QUERIES
+        trained = _trained(name)
         best = float("inf")
         for rep in range(3):  # min-of-2, plus a 3rd rep for heavy
             if trained:
@@ -1332,31 +903,20 @@ def main() -> None:
         spark.sparkContext._jvm.System.gc()
 
     streaming_rate = round(streaming_lines_per_sec(spark), 1)
-    # sustained + capacity + JVM control run in a FRESH subprocess (r12
-    # verdict ask #1 — see stream_main_isolated); the in-suite fallback
-    # remains for the quick iteration loop
-    if os.environ.get("SPARK_GRAFT_STREAM_ISOLATED", "1") == "0":
-        sustained = _retry_if_missed(lambda: streaming_sustained(spark))
-        capacity = streaming_capacity(spark)
-        jvm_control = streaming_sustained_jvm(spark)
-    else:
-        sm = run_stream_main_subprocess()
-        sustained = sm.get("streaming_sustained", {"err": sm.get("err", "missing")})
-        capacity = sm.get("streaming_capacity", {})
-        jvm_control = sm.get("streaming_sustained_jvm", {})
-        for sec in (sustained, capacity, jvm_control):
-            if isinstance(sec, dict) and sec:
-                sec["isolated"] = True
+    # label-path sections run in a FRESH process (see stream_main_isolated)
+    sm = _spawn_json(["--stream-main"], 1800)
+    streams = {
+        k: {**(sm.get(SECTIONS[k]) or {"err": "isolated stream-main run failed to report"}), "isolated": True}
+        for k in ("sustained", "capacity", "jvm")
+    }
     # the dedup tiers run LAST after ~15 min of accumulated JVM
     # pressure and read 28-48k docs/s run-to-run on identical code —
     # same retry-once rule as the capacity sweep; these stay in-suite
     # BY DESIGN (they measure keep-up under realistic co-load; their
-    # capability knees come from the fresh-process sweeps below)
-    dedup_tier = _retry_if_missed(lambda: streaming_dedup_sustained(spark))
-    emb_dedup_tier = _retry_if_missed(lambda: streaming_embedding_dedup_sustained(spark))
-    url_tier = _retry_if_missed(lambda: streaming_url_dedup_sustained(spark))
-    para_tier = _retry_if_missed(lambda: streaming_paragraph_dedup_sustained(spark))
-    dedup_capacity = run_dedup_capacity_subprocess()
+    # capability knee comes from the fresh-process sweep below)
+    for k in ("dedup", "embdedup", "urldedup", "paradedup"):
+        streams[k] = _retry_if_missed(lambda k=k: _sustained(spark, k))
+    streams["dedup_capacity"] = run_dedup_capacity_subprocess()
 
     total = round(sum(timings.values()), 3)
     # fixed 20-query control group (stable since round 7, untouched by
@@ -1386,26 +946,17 @@ def main() -> None:
     prev_control, prev_round = None, None
     import glob
 
-    for f in sorted(glob.glob(os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_r*.json"))):
+    for f in sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))):
         try:
             wrap = json.load(open(f))
             lines_ = [ln for ln in wrap.get("tail", "").splitlines() if ln.strip().startswith("{")]
             prev_payload = json.loads(lines_[-1])
             c = prev_payload.get("control_sec")
             # same-SF runs only — a sf0.01 iteration run must not
-            # compare its control against the sf0.1 round record.
-            # Compare as floats: the payload stores sf=float('1')=1.0
-            # while the dir suffix reads '1', so a string compare would
-            # silently drop the control for integer SFs
-            def _sfval(x):
-                try:
-                    return float(x)
-                except (TypeError, ValueError):
-                    return str(x)
-
-            if c and _sfval(prev_payload.get("sf")) == _sfval(
-                SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-            ):
+            # compare its control against the sf0.1 round record
+            # (_sfval: a string compare would silently drop the control
+            # for integer SFs)
+            if c and _sfval(prev_payload.get("sf")) == _sfval(sf):
                 prev_control, prev_round = c, wrap.get("n")
         except Exception:
             continue
@@ -1417,14 +968,7 @@ def main() -> None:
         "n_queries": len(timings),  # normalize round-over-round totals
         "control_sec": control_sec,  # frozen 20-query drift reference
         "streaming_lines_per_sec": streaming_rate,
-        "streaming_sustained": sustained,
-        "streaming_capacity": capacity,
-        "streaming_sustained_jvm": jvm_control,
-        "streaming_dedup_tier": dedup_tier,
-        "streaming_embedding_dedup_tier": emb_dedup_tier,
-        "streaming_url_dedup_tier": url_tier,
-        "streaming_paragraph_dedup_tier": para_tier,
-        "streaming_dedup_capacity": dedup_capacity,
+        **{SECTIONS[k]: streams[k] for k in MAIN_STREAMS},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     if trained_warm:
@@ -1442,34 +986,19 @@ def main() -> None:
     # (The front slots also close the r12 ADVICE one-round baseline
     # gap: r12 primed them warm while r11 measured them cold; from r13
     # on, both the warm in-suite number and an isolated number exist.)
-    if os.environ.get("SPARK_GRAFT_ISOLATED_TOP10", "1") != "0":
-        import subprocess as _sp
-
-        top = sorted(timings, key=timings.get, reverse=True)[:10]
-        names = list(dict.fromkeys(list(timings)[:3] + top))
-        try:
-            run = _sp.run(
-                [sys.executable, os.path.abspath(__file__), "--isolated", *names],
-                capture_output=True,
-                text=True,
-                timeout=900,
-                env={**os.environ, "SPARK_GRAFT_SF_DIR": SF_DIR},
-            )
-            iso = {}
-            for ln in reversed(run.stdout.splitlines()):
-                if ln.strip().startswith("{"):
-                    iso = json.loads(ln)
-                    break
-            payload["isolated_top10"] = {
-                n: {"in_suite": timings[n], "isolated": iso.get(n)} for n in names
-            }
-        except Exception:
-            payload["isolated_top10"] = {"err": "isolated sweep failed to report"}
+    top = sorted(timings, key=timings.get, reverse=True)[:10]
+    names = list(dict.fromkeys(list(timings)[:3] + top))
+    iso = _spawn_json(["--isolated", *names], 900)
+    payload["isolated_top10"] = (
+        {n: {"in_suite": timings[n], "isolated": iso.get(n)} for n in names}
+        if iso
+        else {"err": "isolated sweep failed to report"}
+    )
     if prev_control:
         payload["control_vs_prev"] = round(control_sec / prev_control, 3)
         payload["prev_control"] = {"round": prev_round, "control_sec": prev_control}
     # Full per-query detail always lands in the repo for the judge.
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json")
+    detail_path = os.path.join(repo_dir, "BENCH_DETAIL.json")
     with open(detail_path, "w") as fh:
         json.dump(payload, fh, indent=1)
         fh.write("\n")
@@ -1537,32 +1066,22 @@ def main() -> None:
         # [sustained rows/s, kept_up] per tier; [max kept-up offered,
         # first failing offered] for the capacity sweeps — full dicts
         # in BENCH_DETAIL.json
-        "streams": {
-            "sustained": _tier_pair(sustained),
-            "capacity": _cap_pair(capacity),
-            "jvm": _tier_pair(jvm_control),
-            "dedup": _tier_pair(dedup_tier),
-            "embdedup": _tier_pair(emb_dedup_tier),
-            "urldedup": _tier_pair(url_tier),
-            "paradedup": _tier_pair(para_tier),
-            "dedup_capacity": _cap_pair(dedup_capacity),
-        },
+        "streams": {k: (_cap_pair if k in SWEEPS else _tier_pair)(streams[k]) for k in MAIN_STREAMS},
         "detail": "BENCH_DETAIL.json",
     }
     if prev_control:
         tail["control_vs_prev"] = round(control_sec / prev_control, 3)
-    budget = int(os.environ.get("SPARK_GRAFT_TAIL_BUDGET", "1880"))
     shown: dict[str, float] = {}
     for name in sorted(timings, key=timings.get, reverse=True):
         cand = dict(shown)
         cand[name] = round(timings[name], 2)
         tail["queries"] = cand
-        if len(json.dumps(tail, separators=(",", ":"))) <= budget:
+        if len(json.dumps(tail, separators=(",", ":"))) <= TAIL_BUDGET:
             shown = cand
     tail["queries"] = shown
     # sidecar fallback: the exact line the driver should parse, on disk,
     # in case anything still pollutes the stdout tail
-    tail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_TAIL.json")
+    tail_path = os.path.join(repo_dir, "BENCH_TAIL.json")
     with open(tail_path, "w") as fh:
         fh.write(json.dumps(tail, separators=(",", ":")) + "\n")
     print(json.dumps(tail, separators=(",", ":")))
@@ -1575,10 +1094,9 @@ if __name__ == "__main__":
     elif len(sys.argv) > 1 and sys.argv[1] == "--quick":
         print(json.dumps(quick_bench(sys.argv[2:])))
     elif len(sys.argv) > 1 and sys.argv[1] == "--stream-main":
-        print(json.dumps(stream_main_isolated()))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--stream-dedup":
-        print(json.dumps(stream_dedup_isolated()))
-    elif len(sys.argv) > 1 and sys.argv[1] == "--stream-embdedup":
-        print(json.dumps(stream_embdedup_isolated()))
+        print(json.dumps(_fresh_streams("dcafs_spark_bench_stream", stream_main_isolated)))
+    elif len(sys.argv) > 1 and sys.argv[1] in ("--stream-dedup", "--stream-embdedup"):
+        tier = sys.argv[1].removeprefix("--stream-")
+        print(json.dumps(_fresh_streams(f"dcafs_spark_bench_{tier}", stream_capacity_isolated, tier)))
     else:
         main()

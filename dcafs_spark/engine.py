@@ -43,6 +43,7 @@ class PathHandle:
     sinks: list[Callable[[DataFrame, int], Any]] = field(default_factory=list)
     reject_sinks: dict[str, Callable[[DataFrame, int], Any]] = field(default_factory=dict)
     query: Any = None  # StreamingQuery once started
+    store_cols: dict | None = None  # values-store column map; None = no store
 
 
 class Engine:
@@ -108,8 +109,7 @@ class Engine:
             # case-insensitive — see add_source)
             source = source.strip().lower()
             source = self.sources.get(source, source)
-        handle = PathHandle(path_id, source, spec)
-        handle.store_cols = store_cols  # type: ignore[attr-defined]
+        handle = PathHandle(path_id, source, spec, store_cols=store_cols)
         self.paths[path_id] = handle
         return handle
 
@@ -156,7 +156,7 @@ class Engine:
                 f"path '{path_id}' has no stream source bound — register one "
                 f"(ss:addtcp,{path_id}_src,host:port) and re-add the path with it"
             )
-        store_cols = getattr(h, "store_cols", None)
+        store_cols = h.store_cols
         sp = StreamingPath(
             self.spark,
             source=h.source,

@@ -774,8 +774,8 @@ def connected_components(
     # consumers are round 1's union branch and join build side, both
     # pruning the same (node, label) columns, so AQE stage reuse shares
     # the aggregate's exchange inside round 1's single action — the
-    # separate materialization job bought nothing. Measured with
-    # scripts/r15_cc_probe.py on the dedup_clusters pairs at sf0.1:
+    # separate materialization job bought nothing. Measured on the
+    # dedup_clusters pairs at sf0.1 (OPTIMIZATION_r15.md §4):
     # 0.536 s / 8 jobs (r14 form) → 0.393 s / 5 jobs with this + the
     # observe() fold below, identical rows.
     labels = (
@@ -1034,8 +1034,8 @@ def containment_pairs(
             .select(F.col(f"l.{key}").alias(out_a), F.col(f"r.{key}").alias(out_b))
             .distinct()
         )
-        # r15 (verdict item 5, measured scripts/r15_containment_probe.py
-        # at sf0.1): candidate pairs are bare 16-byte id rows — the
+        # r15 (verdict item 5, measured at sf0.1, OPTIMIZATION_r15.md
+        # §6): candidate pairs are bare 16-byte id rows — the
         # DECISION-sized side — while `frame` carries the full shingle
         # arrays. Broadcasting the pairs keeps the array frame out of
         # the verify shuffles entirely (guide §8: attach decisions to

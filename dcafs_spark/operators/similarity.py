@@ -1020,7 +1020,7 @@ def pq_encode(
       micro-rounding (Spark F.round, not numpy banker's). Identity is
       pinned by tests/test_dedup_similarity.py over the fixture
       embeddings and a tie-crafted codebook; throughput measured ≥5×
-      the expression path (scripts/round14_pq_encode_probe.py).
+      the expression path (SCALE.md, "Round-14 PQ-encode engine split").
     """
     if engine == "expr":
         return df.withColumn(

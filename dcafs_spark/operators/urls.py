@@ -170,10 +170,11 @@ def registered_domain(host: Column, suffixes: list[str] | None = None) -> Column
     equal to a bare suffix, falls through unchanged. This literal form
     is for SMALL lists only: the nested-When tree overflows the
     analyzer stack at ≥384 rules (measured, StackOverflowError at plan
-    build — scripts/round14_psl_probe.py). The real public-suffix list
-    (~9k rules) takes `with_registered_domain(mode='broadcast')`, the
-    broadcast map keyed on the host's last 1..4 labels — identical
-    semantics, identity-pinned by tests/test_curation_ops.py."""
+    build — SCALE.md, "Round-14 PSL-scale registered_domain"). The
+    real public-suffix list (~9k rules) takes
+    `with_registered_domain(mode='broadcast')`, the broadcast map keyed
+    on the host's last 1..4 labels — identical semantics,
+    identity-pinned by tests/test_curation_ops.py."""
     sufs = sorted(
         suffixes if suffixes is not None else PUBLIC_SUFFIXES_SAMPLE,
         key=lambda s: (-s.count("."), -len(s)),
@@ -188,9 +189,9 @@ def registered_domain(host: Column, suffixes: list[str] | None = None) -> Column
 
 # Past this rule count `with_registered_domain(mode="auto")` switches
 # from the literal CASE chain to the broadcast-join path. Measured
-# (scripts/round14_psl_probe.py, r14 SCALE.md): the chain is linear in
-# rules (0.17 s @5 → 1.21 s @128 → 2.64 s @256 for 8k rows) and the
-# nested-When tree OVERFLOWS THE ANALYZER STACK at ≥384 rules
+# (SCALE.md, "Round-14 PSL-scale registered_domain"): the chain is
+# linear in rules (0.17 s @5 → 1.21 s @128 → 2.64 s @256 for 8k rows)
+# and the nested-When tree OVERFLOWS THE ANALYZER STACK at ≥384 rules
 # (StackOverflowError at plan build — harder than the ~1000-term
 # codegen hazard); the broadcast path is flat ~0.9 s at 9,000 rules
 # regardless of rule count. Crossover ≈64 rules.

@@ -9,7 +9,7 @@ QueryExecutionListener, and count FileScans per base table.
 Methodology note (round 14). The gate originally counted scans in the
 *initial* plan on the belief that AQE exchange reuse does not fire
 under writes (round-8 finding, Spark 3.x-era). Measured again on Spark
-4.1.2 (scripts/r14_write_reuse_probe.py): AQE DOES reuse shuffle
+4.1.2 (OPTIMIZATION_r14.md §8): AQE DOES reuse shuffle
 stages under a noop write whenever the duplicated subtrees are
 identical after column pruning — exactly as under collect — and only
 genuinely re-executes them when consumers prune different columns.

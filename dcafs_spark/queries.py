@@ -1069,8 +1069,9 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _corpus_curation_frame(docs: DataFrame) -> DataFrame:
-    """The C4 chain over a (doc_id, url, text) frame — shared by the
-    gate above and scripts/round14_curation_probe.py's SCALE rungs."""
+    """The C4 chain over a (doc_id, url, text) frame — the gate above;
+    its inflated-frame rungs are SCALE.md, "Round-14 corpus_curation
+    rungs"."""
     from dcafs_spark.operators.dedup import paragraph_chunks
     from dcafs_spark.operators.similarity import bounded_topk
     from dcafs_spark.operators.textan import (
@@ -9261,8 +9262,8 @@ def q_lm_ppl_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lm_ppl_frame(docs: DataFrame) -> DataFrame:
     """The held-out bigram-LM pipeline over a (doc_id, text) frame —
-    shared by the gate above and scripts/round14_spans_ppl_probe.py's
-    SCALE rungs."""
+    the gate above; its inflated-frame rungs are SCALE.md, "Round-14
+    dup_span_stats / lm_ppl_filter rungs"."""
     toks = docs.select("doc_id", _toks_expr().alias("w"))
     # r14: NO lineage cut on the pair stream. Its two consumers are the
     # train slice (doc_id % 10 — the filter pushes below the explode to

@@ -87,12 +87,19 @@ class ValuesStore:
         self.rules.append(rule)
 
     # ---------------------------------------------------------- batch path
-    def batch_deltas(self, df: DataFrame, group="group", name="name", value="value", ts="ts") -> DataFrame:
+    def batch_deltas(
+        self, df: DataFrame, group="group", name="name", value="value", ts="ts", seq_keys=()
+    ) -> DataFrame:
         """Distributed reduction: one delta row per key per batch.
 
         collect_list over the groupBy is bounded: only the last
         ``history_n`` values matter, so we aggregate the batch tail via
         max_by struct packing (avoids shipping whole batches driver-side).
+
+        ``seq_keys`` (the ruled keys, few by construction) additionally
+        get their full ts-ordered value sequence in ``d_seq`` — inside
+        the same aggregation, so rules cost no extra job; every other
+        key's ``d_seq`` is NULL.
 
         NULL values are non-measurements (the reference's RealVal only
         updates on a parsed double) and are dropped up front: without
@@ -101,17 +108,14 @@ class ValuesStore:
         last/history with None.
         """
         df = df.filter(F.col(value).isNotNull())
-        packed = F.array_sort(
-            F.collect_list(F.struct(F.col(ts).alias("t"), F.col(value).alias("v")))
-        )
+        tv = F.struct(F.col(ts).alias("t"), F.col(value).alias("v"))
+        packed = F.array_sort(F.collect_list(tv))
         # dynamic start: slice(-n) on an array shorter than n is empty,
         # so clamp to -size when the batch holds fewer than n values
         tail = F.slice(
             packed, F.greatest(F.lit(-self.history_n), -F.size(packed)), F.lit(self.history_n)
         )
-        return df.groupBy(
-            F.col(group).alias("group"), F.col(name).alias("name")
-        ).agg(
+        aggs = [
             F.max_by(F.col(value), F.col(ts)).alias("d_last"),
             F.min(value).alias("d_min"),
             F.max(value).alias("d_max"),
@@ -119,7 +123,14 @@ class ValuesStore:
             F.sum(value).alias("d_sum"),
             F.max(ts).alias("d_ts"),
             F.transform(tail, lambda s: s["v"]).alias("d_tail"),
-        )
+        ]
+        if seq_keys:
+            key = F.struct(F.col(group).alias("g"), F.col(name).alias("n"))
+            wanted = [F.struct(F.lit(g).alias("g"), F.lit(n).alias("n")) for g, n in sorted(seq_keys)]
+            # collect_list skips the NULLs when() yields for unruled rows
+            seq = F.array_sort(F.collect_list(F.when(key.isin(*wanted), tv)))
+            aggs.append(F.transform(seq, lambda s: s["v"]).alias("d_seq"))
+        return df.groupBy(F.col(group).alias("group"), F.col(name).alias("name")).agg(*aggs)
 
     def merge_batch(self, batch_df: DataFrame, **cols) -> None:
         """foreachBatch body: merge per-key deltas into running state,
@@ -130,44 +141,10 @@ class ValuesStore:
 
         Ruled keys are few (one per configured triggered cmd), so only
         THEIR full ordered value sequences come back to the driver —
-        every other key still reduces to one delta row distributedly."""
+        every other key still reduces to one delta row distributedly,
+        and both ride one aggregation job."""
         ruled = {(r.group, r.name) for r in self.rules}
-        group = cols.get("group", "group")
-        name = cols.get("name", "name")
-        value = cols.get("value", "value")
-        ts = cols.get("ts", "ts")
-        seqs: dict[tuple[str, str], list[float]] = {}
-        persisted = False
-        if ruled:
-            # two jobs consume this batch (the ruled-key sequences and
-            # the per-key deltas) — persist so the micro-batch is
-            # scanned once, not recomputed per job
-            try:
-                batch_df.persist()
-                persisted = True
-            except Exception:
-                pass  # e.g. a plan that disallows caching: correctness unaffected
-            key_expr = F.struct(F.col(group).alias("g"), F.col(name).alias("n"))
-            wanted = [F.struct(F.lit(g).alias("g"), F.lit(n).alias("n")) for g, n in sorted(ruled)]
-            seq_rows = (
-                batch_df.filter(key_expr.isin(*wanted) & F.col(value).isNotNull())
-                .groupBy(F.col(group).alias("group"), F.col(name).alias("name"))
-                .agg(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct(F.col(ts).alias("t"), F.col(value).alias("v")))
-                        ),
-                        lambda s: s["v"],
-                    ).alias("vals")
-                )
-                .collect()
-            )
-            seqs = {(r["group"], r["name"]): list(r["vals"]) for r in seq_rows}
-        try:
-            delta_rows = self.batch_deltas(batch_df, **cols).collect()
-        finally:
-            if persisted:
-                batch_df.unpersist()
+        delta_rows = self.batch_deltas(batch_df, seq_keys=ruled, **cols).collect()
         for row in delta_rows:
             key = (row["group"], row["name"])
             st = self.state.setdefault(key, _KeyState())
@@ -180,8 +157,8 @@ class ValuesStore:
             st.last_ts = row["d_ts"]
             pre_hist = list(st.history)
             st.history = (st.history + list(row["d_tail"]))[-self.history_n :]
-            if key in seqs:
-                self._eval_rules_seq(key, prev, seqs[key], pre_hist)
+            if key in ruled:
+                self._eval_rules_seq(key, prev, list(row["d_seq"]), pre_hist)
         if len(self.state) > self.max_keys:
             raise RuntimeError(
                 f"ValuesStore key cardinality {len(self.state)} exceeds max_keys="

@@ -710,6 +710,38 @@ class TestValuesStoreReviewRegressions:
         assert store.fired_log == []  # sample stdev undefined at n=1
 
 
+class TestValuesStoreOneAggregation:
+    def test_rules_add_no_jobs(self, spark):
+        """Ruled-key sequences ride the delta aggregation: a merge with a
+        rule issues no more Spark jobs than one without, on the same
+        localCheckpointed batch (the runner's fan-out shape)."""
+        from dcafs_spark.streaming.values_store import TriggerRule, ValuesStore
+
+        sc = spark.sparkContext
+        batch = spark.range(2000).selectExpr(
+            "'g' AS group", "CAST(id % 20 AS STRING) AS name",
+            "CAST(id % 13 AS DOUBLE) AS value", "CAST(id AS DOUBLE) AS ts",
+        ).localCheckpoint(eager=True)
+
+        def jobs(store, tag):
+            sc.setJobGroup(tag, tag)
+            try:
+                store.merge_batch(batch)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            return len(sc.statusTracker().getJobIdsForGroup(tag))
+
+        plain = ValuesStore()
+        ruled = ValuesStore()
+        ruled.add_rule(TriggerRule("g", "3", "comparison", comparison="above 10"))
+        n_plain = jobs(plain, "vs_merge_plain")
+        n_ruled = jobs(ruled, "vs_merge_ruled")
+        assert n_ruled <= n_plain, (n_ruled, n_plain)
+        # same per-key state either way; the rule saw the whole sequence
+        assert plain.state == ruled.state and len(plain.state) == 20
+        assert [v for *_k, v in ruled.fired_log] == [11.0, 12.0] * 8
+
+
 class TestSqliteUpsertReviewFixes:
     """Round-10 review: upsert with create=True must actually upsert —
     the generated table previously had no UNIQUE constraint, so every
