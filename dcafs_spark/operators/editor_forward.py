@@ -14,6 +14,7 @@ control flow.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -165,11 +166,15 @@ class EditorForward:
     # (same stream-static pattern as MathForward.rtvals)
     rtvals: dict[str, Column] = None  # type: ignore[assignment]
 
-    def apply(self, df: DataFrame, drop_failed: bool = True) -> DataFrame:
+    # built once per operator: a streaming path applies one operator to
+    # every micro-batch
+    @cached_property
+    def _edited(self) -> Column:
         col = F.col(self.column)
         for e in self.edits:
             col = _apply_edit(col, e, self.delimiter, self.rtvals)
-        out = df.withColumn(self.column, col)
-        if drop_failed:
-            out = out.filter(F.col(self.column).isNotNull())
-        return out
+        return col
+
+    def apply(self, df: DataFrame, drop_failed: bool = True) -> DataFrame:
+        out = df.withColumn(self.column, self._edited)
+        return out.filter(F.col(self.column).isNotNull()) if drop_failed else out

@@ -14,6 +14,7 @@ subplan and both sides stay codegen'd.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -85,6 +86,9 @@ class FilterForward:
     negate: bool = False
     column: str = "value"
 
+    # built once per operator: a streaming path applies one operator to
+    # every micro-batch
+    @cached_property
     def predicate(self) -> Column:
         col = F.col(self.column)
         pred = F.lit(True)
@@ -95,12 +99,11 @@ class FilterForward:
         return pred
 
     def apply(self, df: DataFrame) -> DataFrame:
-        return df.filter(self.predicate())
+        return df.filter(self.predicate)
 
     def fork(self, df: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(accepted, rejected) — rejected feeds 'reverse targets'."""
-        p = self.predicate()
-        return df.filter(p), df.filter(~p)
+        return df.filter(self.predicate), df.filter(~self.predicate)
 
     def apply_with_ignores(
         self, df: DataFrame, ignores: int, order_col: str, key_cols: list[str] | None = None
@@ -115,7 +118,7 @@ class FilterForward:
         per key partition."""
         from pyspark.sql import Window
 
-        p = self.predicate()
+        p = self.predicate
         part = key_cols or [F.lit(1)]
         w = Window.partitionBy(*part).orderBy(order_col)
         # failures-since-last-pass = own rank minus the rank of the most

@@ -22,6 +22,7 @@ resolve through the ocean function library.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -74,7 +75,10 @@ class MathForward:
         arr = F.split(F.col(self.column), F.lit(self.delimiter), -1)
         return F.try_element_at(arr, F.lit(k + 1)).try_cast("double")
 
-    def _build_env(self) -> tuple[dict[int, Column], dict[str, Column]]:
+    # the Columns below are built once per operator: a streaming path
+    # applies one operator to every micro-batch
+    @cached_property
+    def _env(self) -> tuple[dict[int, Column], dict[str, Column]]:
         """Thread ops sequentially: later ops see earlier results."""
         env: dict[int, Column] = {}
         named: dict[str, Column] = {}
@@ -104,17 +108,21 @@ class MathForward:
                 named[op.target] = result
         return env, named
 
+    @cached_property
+    def _typed(self) -> list[Column]:
+        env, named = self._env
+        return [v.alias(f"i{k}") for k, v in sorted(env.items())] + [
+            v.alias(name) for name, v in named.items()
+        ]
+
     def apply_typed(self, df: DataFrame, keep: list[str] | None = None) -> DataFrame:
         """Expose every written field/named output as a typed column."""
-        env, named = self._build_env()
-        cols = [F.col(c) for c in (keep or df.columns)]
-        cols += [v.alias(f"i{k}") for k, v in sorted(env.items())]
-        cols += [v.alias(name) for name, v in named.items()]
-        return df.select(*cols)
+        return df.select(*(keep or ["*"]), *self._typed)
 
-    def apply(self, df: DataFrame) -> DataFrame:
-        """dcafs-fidelity mode: rewrite the delimited line in place."""
-        env, named = self._build_env()
+    @cached_property
+    def _line(self) -> Column:
+        """The rewritten delimited line."""
+        env, _named = self._env
         arr = F.split(F.col(self.column), F.lit(self.delimiter), -1)
 
         def rewrite(x: Column, i: Column) -> Column:
@@ -143,7 +151,10 @@ class MathForward:
             # only if the caller stripped it — match the reference, which
             # appends regardless
             new_line = F.concat(new_line, F.lit("*"), nmea_checksum(new_line))
-        out = df.withColumn(self.column, new_line)
-        for name, v in named.items():
-            out = out.withColumn(name, v)
-        return out
+        return new_line
+
+    def apply(self, df: DataFrame) -> DataFrame:
+        """dcafs-fidelity mode: rewrite the delimited line in place."""
+        out = df.withColumn(self.column, self._line)
+        named = self._env[1]
+        return out.withColumns(named) if named else out

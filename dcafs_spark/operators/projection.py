@@ -14,6 +14,7 @@ the caller can take from `errors()`).
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import cached_property
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -60,22 +61,29 @@ class Generic:
             out = F.coalesce(out, F.lit(f.default).cast(t))
         return out
 
+    # guard and select list are built once per operator: a streaming
+    # path applies one operator to every micro-batch
+    @cached_property
     def guard(self) -> Column:
         if self.startswith:
             return F.col(self.column).startswith(self.startswith)
         return F.lit(True)
 
-    def apply(self, df: DataFrame, keep: list[str] | None = None) -> DataFrame:
+    @cached_property
+    def _select(self) -> list[Column]:
         arr = self._array()
-        cols: list[Column] = [F.col(c) for c in (keep or [])]
-        for f in self.fields:
-            cols.append(self._cast(F.try_element_at(arr, F.lit(f.index + 1)), f).alias(f.name))
+        cols = [self._cast(F.try_element_at(arr, F.lit(f.index + 1)), f).alias(f.name) for f in self.fields]
         for name, kind in self.fillers.items():
             if kind in ("timestamp", "localdt", "utcdt"):
                 cols.append(F.current_timestamp().alias(name))
             elif kind == "epoch":
                 cols.append((F.unix_millis(F.current_timestamp())).alias(name))
-        return df.filter(self.guard()).select(*cols)
+        return cols
+
+    def apply(self, df: DataFrame, keep: list[str] | None = None) -> DataFrame:
+        if self.startswith:
+            df = df.filter(self.guard)
+        return df.select(*(keep or []), *self._select)
 
     def errors(self, df: DataFrame) -> DataFrame:
         """Rows where any non-defaulted typed field fails to parse —
@@ -89,7 +97,7 @@ class Generic:
                 continue
             raw = F.try_element_at(arr, F.lit(f.index + 1))
             bad = bad | (F.trim(raw).try_cast(t).isNull() & raw.isNotNull())
-        return df.filter(self.guard()).filter(bad)
+        return df.filter(self.guard).filter(bad)
 
 
 def valmap(

@@ -26,8 +26,13 @@ Spec shape::
     }
 
 `compile_path` returns (main DataFrame, {reject_tag: DataFrame}).
-The same compiler serves batch and streaming inputs — a streaming df
-flows through identically (all steps are narrow transformations).
+It is two halves: `build_path` makes each step's operator once (an
+operator keeps the Columns it builds, none of which depends on the
+input frame) and `bind_steps` applies them to a frame, one or two
+DataFrame calls per step. `compile_path` does both; the streaming
+runner builds once per query and binds each micro-batch. The same
+compiler serves batch and streaming inputs — a streaming df flows
+through identically (all steps are narrow transformations).
 
 A filter step's failure route mirrors the reference's *reverse
 targets* (`FilterForward.java:69-81`): the complementary predicate
@@ -36,7 +41,7 @@ over the same parent plan. Catalyst reuses the scan for both sides.
 
 from __future__ import annotations
 
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame
 
@@ -99,61 +104,85 @@ def _build_generic(step: dict, delimiter: str) -> Generic:
     )
 
 
-def compile_steps(
-    df: DataFrame, steps: list[dict], delimiter: str = ",", column: str = "value"
-) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Apply each step in order; returns (main, rejects-by-tag)."""
-    rejects: dict[str, DataFrame] = {}
-    for step in steps:
-        kind = step["type"].lower()
-        if kind == "filter":
-            ff = _build_filter(step, delimiter, column)
-            if "reject" in step:
-                df, rejected = ff.fork(df)
-                rejects[step["reject"]] = rejected
-            else:
-                df = ff.apply(df)
-        elif kind == "math":
-            mf = _build_math(step, delimiter, column)
-            if step.get("typed", False):
-                df = mf.apply_typed(df, keep=step.get("keep"))
-            else:
-                df = mf.apply(df)
-        elif kind == "editor":
-            ed = _build_editor(step, delimiter, column)
-            df = ed.apply(df)
-        elif kind == "generic":
-            g = _build_generic(step, delimiter)
-            df = g.apply(df, keep=step.get("keep"))
-        elif kind == "valmap":
-            df = valmap(
-                df,
-                split=step.get("split", ":"),
-                multi_delimiter=step.get("multi"),
-                column=column,
-            )
-        elif kind == "custom":
-            # extension point — the Spark analog of the reference's
-            # custom label handlers (LabelWorker doLABEL(Datagram),
-            # manual 'Adding a label' / SURVEY §2.10): a user callable
-            # DataFrame -> DataFrame spliced into the compiled chain.
-            # Distribution discipline is the author's contract, same as
-            # any DataFrame transform; no driver-side row loop exists
-            # here for one to accidentally fall into.
-            fn = step.get("fn")
-            if not callable(fn):
-                raise ValueError("custom step needs a callable 'fn'")
-            df = fn(df)
-        else:
-            raise ValueError(f"unknown step type: {kind}")
-    return df, rejects
+# One built step: applies its operator to a frame, adding any reject
+# route it forks off to the dict it is given.
+Step = Callable[[DataFrame, dict[str, DataFrame]], DataFrame]
 
 
-def compile_path(df: DataFrame, spec: PathSpec) -> tuple[DataFrame, dict[str, DataFrame]]:
-    """Compile a full path spec against an input DataFrame."""
-    return compile_steps(
-        df,
+def _build_step(step: dict, delimiter: str, column: str) -> Step:
+    kind = step["type"].lower()
+    if kind == "filter":
+        ff = _build_filter(step, delimiter, column)
+        if "reject" not in step:
+            return lambda df, _rejects: ff.apply(df)
+        tag = step["reject"]
+
+        def fork(df: DataFrame, rejects: dict[str, DataFrame]) -> DataFrame:
+            df, rejects[tag] = ff.fork(df)
+            return df
+
+        return fork
+    if kind == "math":
+        mf = _build_math(step, delimiter, column)
+        if step.get("typed", False):
+            keep = step.get("keep")
+            return lambda df, _rejects: mf.apply_typed(df, keep=keep)
+        return lambda df, _rejects: mf.apply(df)
+    if kind == "editor":
+        ed = _build_editor(step, delimiter, column)
+        return lambda df, _rejects: ed.apply(df)
+    if kind == "generic":
+        g = _build_generic(step, delimiter)
+        keep = step.get("keep")
+        return lambda df, _rejects: g.apply(df, keep=keep)
+    if kind == "valmap":
+        split, multi = step.get("split", ":"), step.get("multi")
+        return lambda df, _rejects: valmap(df, split=split, multi_delimiter=multi, column=column)
+    if kind == "custom":
+        # extension point — the Spark analog of the reference's
+        # custom label handlers (LabelWorker doLABEL(Datagram),
+        # manual 'Adding a label' / SURVEY §2.10): a user callable
+        # DataFrame -> DataFrame spliced into the compiled chain.
+        # Distribution discipline is the author's contract, same as
+        # any DataFrame transform; no driver-side row loop exists
+        # here for one to accidentally fall into.
+        fn = step.get("fn")
+        if not callable(fn):
+            raise ValueError("custom step needs a callable 'fn'")
+        return lambda df, _rejects: fn(df)
+    raise ValueError(f"unknown step type: {kind}")
+
+
+def build_steps(steps: list[dict], delimiter: str = ",", column: str = "value") -> list[Step]:
+    """Make each step's operator once. An operator builds its Columns on
+    first use and keeps them; none of them depends on the frame, so a
+    streaming path builds here once per query and binds each batch."""
+    return [_build_step(step, delimiter, column) for step in steps]
+
+
+def build_path(spec: PathSpec) -> list[Step]:
+    return build_steps(
         spec.get("steps", []),
         delimiter=spec.get("delimiter", ","),
         column=spec.get("column", "value"),
     )
+
+
+def bind_steps(df: DataFrame, steps: list[Step]) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Apply built steps in order; returns (main, rejects-by-tag)."""
+    rejects: dict[str, DataFrame] = {}
+    for step in steps:
+        df = step(df, rejects)
+    return df, rejects
+
+
+def compile_steps(
+    df: DataFrame, steps: list[dict], delimiter: str = ",", column: str = "value"
+) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Apply each step in order; returns (main, rejects-by-tag)."""
+    return bind_steps(df, build_steps(steps, delimiter, column))
+
+
+def compile_path(df: DataFrame, spec: PathSpec) -> tuple[DataFrame, dict[str, DataFrame]]:
+    """Compile a full path spec against an input DataFrame."""
+    return bind_steps(df, build_path(spec))

@@ -11,7 +11,7 @@ Spark-first mapping:
     prepared-statement batches in parallel, replacing the reference's
     single flush worker. Flush `age` ≈ the streaming trigger interval.
   * SQLite is a single-writer file DB → a driver-side writer using
-    Python's stdlib sqlite3 over Arrow batches. Used for the
+    Python's stdlib sqlite3 over the batch's Rows. Used for the
     reference's default store-to-sqlite flow and for tests (no JDBC
     driver jar needed). Rows stream via toLocalIterator so the driver
     never holds the full batch.

@@ -28,6 +28,7 @@ window + filter before the shuffle-free write.
 from __future__ import annotations
 
 import os
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -42,6 +43,19 @@ _ROLLOVER_TRUNC = {
     "month": "month",
     "year": "year",
 }
+
+# Spark's file commit stages each job under `<path>/_temporary/0` and
+# the first job to commit deletes it, so two appends to one directory
+# at once fail. A path's sinks run concurrently; writers to one
+# directory (one collector attached twice, or two collectors sharing
+# it) take turns.
+_dir_locks: dict[str, threading.Lock] = {}
+_dir_locks_guard = threading.Lock()
+
+
+def _dir_lock(path: str) -> threading.Lock:
+    with _dir_locks_guard:
+        return _dir_locks.setdefault(os.path.abspath(path), threading.Lock())
 
 
 def decimate(df: DataFrame, skipcount: int, order_col: str, key_cols: list[str] | None = None) -> DataFrame:
@@ -138,13 +152,14 @@ class FileCollector:
             writer = writer.option("compression", "gzip")
         if self.max_records_per_file:
             writer = writer.option("maxRecordsPerFile", self.max_records_per_file)
-        writer.format(self.fmt).save(self.path)
-        # header sidecar AFTER the save: mode="overwrite" wipes the
-        # output directory, so a header written first would vanish
-        # with it. Driver-local filesystem only (the reference writes
-        # local files too); a remote URI sink would need a
-        # Hadoop-FS write here instead of os.open.
-        self._write_header()
+        with _dir_lock(self.path):
+            writer.format(self.fmt).save(self.path)
+            # header sidecar AFTER the save: mode="overwrite" wipes the
+            # output directory, so a header written first would vanish
+            # with it. Driver-local filesystem only (the reference writes
+            # local files too); a remote URI sink would need a
+            # Hadoop-FS write here instead of os.open.
+            self._write_header()
 
     def foreach_batch(self):
         """Adapter for StreamingPath.sinks."""

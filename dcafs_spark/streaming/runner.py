@@ -4,9 +4,26 @@ Parity target: the reference's main loop — stream → forwards → store
 (SURVEY §3.1). One continuous query per path:
 
     readStream (file/rate/socket/kafka)
-      → compile_path steps (narrow, codegen-fused)
+      → path steps (narrow, codegen-fused)
       → foreachBatch { values-store merge + trigger rules
-                       + sink appends }
+                       ‖ sink appends ‖ reject-route appends }
+
+The path's operators are built once per query (`dsl.build_path`) and
+bound to each micro-batch's frame (`dsl.bind_steps`); only `custom`
+and `valmap` steps run their code per batch. A forward edited while
+the query runs is rebuilt before the next batch.
+
+Fan-out mirrors the reference's forwards, which push each record to
+every target independently (`AbstractForward.java:91-111`). A
+micro-batch's input is fixed before foreachBatch runs, and the main
+frame is materialized once (an eager ephemeral localCheckpoint) when
+more than one consumer reads it, so the consumers are independent
+readers of one immutable frame: the store merge, every sink and every
+reject sink run concurrently, one thread each, inside the stream's job
+group. The batch ends when all of them have; the first failure in
+registration order (store, sinks, reject sinks) fails it. Sinks that
+write one external target take turns themselves: `FileCollector`
+serializes its writes per output directory.
 
 The reference's flush knobs map onto the micro-batch trigger: its
 JDBC buffer flushed at `batchsize` rows or `age` seconds
@@ -22,16 +39,49 @@ surfaces Spark's native handling as an opt-in.
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Any, Callable
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dcafs_spark.runtime import checkpoint
 
-from dcafs_spark.plans.dsl import PathSpec, compile_path
+# compile_path stays importable from here: perfbench's traced replay
+# wraps runner.compile_path (the runner itself builds once, binds per batch)
+from dcafs_spark.plans.dsl import PathSpec, bind_steps, build_path, compile_path  # noqa: F401
 from dcafs_spark.streaming.values_store import ValuesStore
+
+
+def _fan_out(session: SparkSession, calls: list[Callable[[], Any]]) -> None:
+    """Run one micro-batch's consumers at once, one thread each.
+
+    Each thread takes the stream thread's local properties (its job
+    group, so ``query.stop()`` cancels fan-out jobs too) and the
+    session's tags. All calls finish before this returns; the first
+    failure in registration order is re-raised, failing the batch."""
+    if not calls:
+        return
+    with ThreadPoolExecutor(max_workers=len(calls)) as pool:
+        # wrap per call: each wrapper clones the properties it installs,
+        # so sibling threads never share one mutable Properties object
+        futures = [pool.submit(inheritable_thread_target(session)(call)) for call in calls]
+    for f in futures:
+        f.result()
+
+
+def _spec_copy(spec: Any) -> Any:
+    """Copy a path spec's dicts and lists, keeping the leaves (custom
+    step callables too) as they are, so `==` tells an edited spec from
+    the one a path was built from."""
+    if isinstance(spec, dict):
+        return {k: _spec_copy(v) for k, v in dict(spec).items()}
+    if isinstance(spec, list):
+        return [_spec_copy(v) for v in list(spec)]
+    return spec
 
 
 def kafka_options(spec: dict) -> dict[str, str]:
@@ -129,14 +179,20 @@ class StreamingPath:
         df = build_source(self.spark, self.source)
         if self.watermark:
             df = df.withWatermark("ts", self.watermark)
+        built = (_spec_copy(self.path), build_path(self.path))
 
         def process(batch_df: DataFrame, batch_id: int) -> None:
-            # compile per batch: steps are narrow, so this is plan-build
-            # cost only (µs), and rtval refs re-resolve each batch
-            # (stream-static join semantics, SURVEY §2.8)
-            main, rejects = compile_path(batch_df, self.path)
-            n_consumers = len(self.sinks) + (1 if self.store is not None else 0)
-            if n_consumers > 1:
+            nonlocal built
+            # forward edits (mf:addop, ef:addedit, mf:alter,delim) change
+            # the spec of a running path in place; like the reference's
+            # forwards they apply from the next micro-batch
+            if self.path != built[0]:
+                built = (_spec_copy(self.path), build_path(self.path))
+            main, rejects = bind_steps(batch_df, built[1])
+            # snapshot: a telnet client detaches its sink from another
+            # thread, possibly in the middle of this batch
+            sinks = list(self.sinks)
+            if len(sinks) + (self.store is not None) > 1:
                 # materialize once, fan out — but only when something
                 # actually fans out: the checkpoint costs a full copy.
                 # ephemeral: lifetime is this micro-batch; a failed
@@ -144,13 +200,15 @@ class StreamingPath:
                 # checkpoint, so the deployment seam's reliable mode
                 # would only leak per-batch checkpoint files
                 main = main.transform(checkpoint, eager=True, ephemeral=True)
+            calls = [partial(sink, main, batch_id) for sink in sinks]
             if self.store is not None:
-                self.store.merge_batch(main, **self.store_cols)
-            for sink in self.sinks:
-                sink(main, batch_id)
-            for tag, sink in self.reject_sinks.items():
-                if tag in rejects:
-                    sink(rejects[tag], batch_id)
+                calls.insert(0, partial(self.store.merge_batch, main, **self.store_cols))
+            calls += [
+                partial(sink, rejects[tag], batch_id)
+                for tag, sink in list(self.reject_sinks.items())
+                if tag in rejects
+            ]
+            _fan_out(batch_df.sparkSession, calls)
 
         writer = df.writeStream.foreachBatch(process)
         if query_name:

@@ -261,6 +261,214 @@ class TestStreamingPath:
         assert len(good) == 1 and len(bad) == 1
 
 
+def _ctd_chunks(watch, n: int) -> list[str]:
+    """n one-file chunks of CTD lines plus one noise line each; returns
+    every line written."""
+    watch.mkdir()
+    lines = []
+    for k in range(n):
+        chunk = [f"$CTD0{k},16:25:1{i},{12 + i}.5,38.4,1017,8" for i in range(3)] + [f"noise{k}"]
+        (watch / f"c{k}.txt").write_text("".join(line + "\n" for line in chunk))
+        lines += chunk
+    return lines
+
+
+class TestFanOut:
+    """One micro-batch's consumers (store merge, sinks, reject sinks)
+    run concurrently over one materialized frame."""
+
+    STORE_COLS = {"group": "origin", "name": "station", "value": "temp", "ts": "temp"}
+
+    def _run(self, spark, watch, **kwargs):
+        sp = StreamingPath(spark, source={"kind": "text", "path": str(watch), "maxFilesPerTrigger": 1}, **kwargs)
+        q = sp.start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        return q
+
+    def test_path_built_once_per_query(self, spark, tmp_path, monkeypatch):
+        from dcafs_spark.operators import filter_forward
+
+        calls = {"rules": 0, "custom": 0}
+        build_rule = filter_forward._rule_to_predicate
+
+        def counting_rule(*args):
+            calls["rules"] += 1
+            return build_rule(*args)
+
+        def custom(df):
+            calls["custom"] += 1
+            return df
+
+        monkeypatch.setattr(filter_forward, "_rule_to_predicate", counting_rule)
+        watch = tmp_path / "w"
+        _ctd_chunks(watch, 3)
+        path = {**STREAM_CTD_PATH, "steps": STREAM_CTD_PATH["steps"] + [{"type": "custom", "fn": custom}]}
+        out: list = []
+        self._run(spark, watch, path=path, sinks=[lambda df, bid: out.extend((bid, r) for r in df.collect())])
+        assert sorted({bid for bid, _ in out}) == [0, 1, 2]
+        # CTD filter: two rules, built for the query, not per batch
+        assert calls == {"rules": 2, "custom": 3}
+        # the stream's rows equal the batch compile of the same lines
+        batch = spark.read.text(str(watch)).withColumn("origin", F.lit("text")).withColumn("ts", F.current_timestamp())
+        main, _rejects = compile_path(batch, path)
+        cols = ["origin", "station", "temp", "sal", "press"]
+        assert sorted(tuple(r[c] for c in cols) for _, r in out) == sorted(
+            tuple(r) for r in main.select(*cols).collect()
+        )
+
+    def test_forward_edit_applies_from_next_batch(self, spark, tmp_path):
+        from dcafs_spark.engine import Engine
+
+        eng = Engine(spark)
+        eng.command("ff:addshort,gga,raw:id:gps,start:$GPGGA")
+        eng.command("mf:addblank,gga,filter:gga")
+        eng.command("mf:addop,gga,i1=i1*2")
+        eng.command("gens:addblank,gga,sr")
+        watch = tmp_path / "w"
+        watch.mkdir()
+        eng.paths["gga"].source = {"kind": "text", "path": str(watch), "maxFilesPerTrigger": 1}
+        got: list = []
+        eng.add_sink("gga", lambda df, bid: got.extend((bid, r["val1"]) for r in df.collect()))
+        (watch / "a.txt").write_text("$GPGGA,10\n")
+        q = eng.start("gga")
+        try:
+            q.processAllAvailable()
+            assert eng.command("mf:addop,gga,i1=i1+1") == "Op added to gga"
+            (watch / "b.txt").write_text("$GPGGA,10\n")
+            q.processAllAvailable()
+        finally:
+            eng.stop("gga")
+        assert got == [(0, 20.0), (1, 21.0)]
+
+    def test_collectors_sharing_a_directory_take_turns(self, spark, tmp_path):
+        watch = tmp_path / "w"
+        _ctd_chunks(watch, 1)
+        out = str(tmp_path / "out")
+        fc = FileCollector(out, fmt="parquet")
+        # one collector attached twice plus a second one on its directory
+        sinks = [fc.foreach_batch(), fc.foreach_batch(), FileCollector(out, fmt="parquet").foreach_batch()]
+        q = self._run(spark, watch, path=STREAM_CTD_PATH, sinks=sinks)
+        assert q.exception() is None
+        assert spark.read.parquet(out).count() == 9
+
+    def test_sink_removed_mid_batch_does_not_skip_the_next(self, spark, tmp_path):
+        watch = tmp_path / "w"
+        _ctd_chunks(watch, 1)
+        got: list = []
+
+        def leaver(df, bid):  # a telnet client dropping its subscription
+            sp_sinks.remove(leaver)
+
+        sp_sinks = [leaver, lambda df, bid: got.append(bid)]
+        self._run(spark, watch, path=STREAM_CTD_PATH, sinks=sp_sinks)
+        assert got == [0]
+        assert len(sp_sinks) == 1
+
+    def test_failing_sink_fails_batch_after_all_consumers_ran(self, spark, tmp_path):
+        from pyspark.errors import StreamingQueryException
+
+        watch = tmp_path / "w"
+        _ctd_chunks(watch, 1)
+        store = ValuesStore()
+        after: list = []
+        rejected: list = []
+
+        def boom(df, bid):
+            raise RuntimeError("sink exploded")
+
+        sp = StreamingPath(
+            spark,
+            source={"kind": "text", "path": str(watch)},
+            path=STREAM_CTD_PATH,
+            store=store,
+            store_cols=self.STORE_COLS,
+            sinks=[boom, lambda df, bid: after.append(df.count())],
+            reject_sinks={"bad": lambda df, bid: rejected.append(df.count())},
+        )
+        q = sp.start()
+        try:
+            with pytest.raises(StreamingQueryException, match="sink exploded"):
+                q.processAllAvailable()
+            assert "sink exploded" in str(q.exception())
+        finally:
+            q.stop()
+        assert after == [3] and rejected == [1]
+        assert store.snapshot()[0]["n_updates"] == 3
+
+    def test_fan_out_jobs_keep_the_stream_job_group(self, spark, tmp_path):
+        watch = tmp_path / "w"
+        _ctd_chunks(watch, 1)
+        groups: dict = {}
+
+        def record(name):
+            def sink(df, bid):
+                groups[name] = df.sparkSession.sparkContext.getLocalProperty("spark.jobGroup.id")
+                df.count()  # a job from the fan-out thread
+
+            return sink
+
+        def on_stream_thread(df):
+            groups["stream"] = spark.sparkContext.getLocalProperty("spark.jobGroup.id")
+            return df
+
+        path = {**STREAM_CTD_PATH, "steps": [{"type": "custom", "fn": on_stream_thread}, *STREAM_CTD_PATH["steps"]]}
+        q = self._run(spark, watch, path=path, sinks=[record("a"), record("b")], reject_sinks={"bad": record("rej")})
+        # the stream thread runs its batch in the query's run-id group,
+        # the group query.stop() cancels
+        assert groups["stream"] == str(q.runId)
+        assert groups == dict.fromkeys(("stream", "a", "b", "rej"), str(q.runId))
+
+    def test_fan_out_runs_every_call_once_and_raises_first_registered(self, spark):
+        import sys
+        import threading
+
+        from dcafs_spark.streaming.runner import _fan_out
+
+        ran: list = []
+        lock = threading.Lock()
+
+        def call(k):
+            def run():
+                with lock:
+                    ran.append(k)
+                if k == 3:  # registered first among the failures, fails last
+                    time.sleep(0.3)
+                    raise ValueError("first registered")
+                if k == 9:
+                    raise KeyError("second registered")
+
+            return run
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            with pytest.raises(ValueError, match="first registered"):
+                _fan_out(spark, [call(k) for k in range(16)])  # more calls than cores
+        finally:
+            sys.setswitchinterval(old)
+        assert sorted(ran) == list(range(16))
+
+    def test_fan_out_inherits_session_tags_without_warning(self, spark, tmp_path):
+        import warnings
+
+        watch = tmp_path / "w"
+        _ctd_chunks(watch, 1)
+        got: list = []
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            self._run(
+                spark,
+                watch,
+                path=STREAM_CTD_PATH,
+                sinks=[lambda df, bid: got.append(df.count()), lambda df, bid: got.append(df.count())],
+            )
+        assert got == [3, 3]
+        assert not [w for w in caught if "Tags will not be inherited" in str(w.message)]
+
+
 class TestFileCollector:
     def test_rollover_partitions_and_decimation(self, spark, tmp_path):
         df = spark.createDataFrame(
