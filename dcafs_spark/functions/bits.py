@@ -66,7 +66,3 @@ def calibrate_2nd_order(x: Column, a: float, b: float, c: float, decimals: int =
     MathUtils.java:1339-1374)."""
     return F.round(a * x * x + b * x + c, decimals)
 
-
-def calibrate_3rd_order(x: Column, a: float, b: float, c: float, d: float, decimals: int = 8) -> Column:
-    """a·x³ + b·x² + c·x + d calibration (MathUtils.calc3rdOrder)."""
-    return F.round(a * x**3 + b * x * x + c * x + d, decimals)

@@ -154,7 +154,9 @@ class MathForward:
         return new_line
 
     def apply(self, df: DataFrame) -> DataFrame:
-        """dcafs-fidelity mode: rewrite the delimited line in place."""
-        out = df.withColumn(self.column, self._line)
-        named = self._env[1]
-        return out.withColumns(named) if named else out
+        """dcafs-fidelity mode: rewrite the delimited line in place.
+
+        Named outputs and the new line are all computed from the input
+        line: each is already the result of the op sequence, so reading
+        the rewritten line would apply an earlier op twice."""
+        return df.withColumns({**self._env[1], self.column: self._line})

@@ -192,23 +192,6 @@ def _sql_iavg(col: str) -> str:
     )
 
 
-def _sql_ts_us(col: str = "ts") -> str:
-    """Unit-proof truncated-µs epoch for oracle SQL.
-
-    The events timestamp has shipped as both TIMESTAMP(MICROS) and
-    TIMESTAMP(NANOS) parquet across rounds, and DuckDB's read type
-    changed too (µs TIMESTAMP in 1.0, exact TIMESTAMP_NS in newer
-    releases). Spark 4.1 always lands on µs-TRUNCATED values
-    (`ts_to_ns`), so the oracle must truncate identically regardless
-    of what resolution its reader preserved. `epoch_ns` is exact for
-    both read shapes and `//` is DuckDB *integer* division (bigint,
-    no double rounding), so this equals Spark's `ts_ns DIV 1000`
-    under every unit. Never use `epoch_us(ts)` or raw `ORDER BY ts`
-    in window/gap logic: at ns resolution they round/sort below the
-    µs that Spark can see."""
-    return f"(epoch_ns({col}) // 1000)"
-
-
 def _csum(col: str):
     """Order-independent exact sum of a 2-decimal double column (events
     `value` is generated at 2dp): integer cent-sum as bigint, back to a

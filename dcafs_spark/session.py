@@ -25,6 +25,11 @@ TABLES = (
     "embeddings",
 )
 
+CHECKPOINT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+FS_CHECKPOINT_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+)
+
 
 def get_spark(app_name: str = "dcafs_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
@@ -33,6 +38,20 @@ def get_spark(app_name: str = "dcafs_spark", shuffle_partitions: int | None = No
     partitions and splits skewed ones at runtime, so a static
     ``shuffle.partitions`` only needs to be an upper bound sized to the
     cluster (e.g. 2-3x total cores), not hand-tuned per query.
+
+    On a local master, streaming checkpoints go through Spark's
+    FileSystem-based checkpoint file manager instead of its default
+    FileContext one. Every micro-batch writes its offset WAL, commit
+    log, file-source log and state-store files through that manager; a
+    FileContext ``createAtomic`` + close took 29.7 ms against 7.4 ms
+    for the FileSystem one (p50 of 35 writes, py4j included, 4-core VM
+    without the native Hadoop library, where Hadoop forks a process for
+    file permissions: 20 forks per FileContext write, 4 per FileSystem
+    write). Spark defaults to FileContext
+    because its rename refuses to overwrite, which keeps the write
+    atomic on HDFS; on a local file system a POSIX rename overwrites
+    under either manager, so local sessions give nothing up. Cluster
+    sessions keep Spark's default.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:
@@ -61,7 +80,10 @@ def get_spark(app_name: str = "dcafs_spark", shuffle_partitions: int | None = No
     )
     if SparkSession.getActiveSession() is None:
         builder = builder.master(os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"))
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if spark.sparkContext.master.startswith("local"):
+        spark.conf.set(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
+    return spark
 
 
 def ensure_parallelism(

@@ -103,9 +103,10 @@ def _update_fn(history_n: int):
             vmax = max(vmax, v.max())
             cnt += len(v)
             total += float(v.sum())
-            if t[-1] >= last_ts:
-                last = float(v[-1])
-                last_ts = float(t[-1])
+            # the latest batch wins, by max ts within it: the reference
+            # stamps records on receipt, and ValuesStore keeps this rule
+            last = float(v[-1])
+            last_ts = float(t[-1])
             hist = (hist + v.tolist())[-history_n:]
         state.update((last, vmin, vmax, cnt, total, hist, last_ts))
         full = len(hist) >= history_n

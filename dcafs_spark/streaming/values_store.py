@@ -99,7 +99,7 @@ class ValuesStore:
         ``seq_keys`` (the ruled keys, few by construction) additionally
         get their full ts-ordered value sequence in ``d_seq`` — inside
         the same aggregation, so rules cost no extra job; every other
-        key's ``d_seq`` is NULL.
+        key's ``d_seq`` is empty.
 
         NULL values are non-measurements (the reference's RealVal only
         updates on a parsed double) and are dropped up front: without
@@ -109,7 +109,11 @@ class ValuesStore:
         """
         df = df.filter(F.col(value).isNotNull())
         tv = F.struct(F.col(ts).alias("t"), F.col(value).alias("v"))
-        packed = F.array_sort(F.collect_list(tv))
+        # no lambdas: higher-order functions (array_sort, transform) are
+        # interpreted row by row inside the generated result projection;
+        # sort_array and getField generate code. The arrays hold
+        # non-null structs, which sort_array orders as array_sort does.
+        packed = F.sort_array(F.collect_list(tv))
         # dynamic start: slice(-n) on an array shorter than n is empty,
         # so clamp to -size when the batch holds fewer than n values
         tail = F.slice(
@@ -122,14 +126,14 @@ class ValuesStore:
             F.count(value).alias("d_count"),
             F.sum(value).alias("d_sum"),
             F.max(ts).alias("d_ts"),
-            F.transform(tail, lambda s: s["v"]).alias("d_tail"),
+            tail.getField("v").alias("d_tail"),
         ]
         if seq_keys:
             key = F.struct(F.col(group).alias("g"), F.col(name).alias("n"))
             wanted = [F.struct(F.lit(g).alias("g"), F.lit(n).alias("n")) for g, n in sorted(seq_keys)]
             # collect_list skips the NULLs when() yields for unruled rows
-            seq = F.array_sort(F.collect_list(F.when(key.isin(*wanted), tv)))
-            aggs.append(F.transform(seq, lambda s: s["v"]).alias("d_seq"))
+            seq = F.sort_array(F.collect_list(F.when(key.isin(*wanted), tv)))
+            aggs.append(seq.getField("v").alias("d_seq"))
         return df.groupBy(F.col(group).alias("group"), F.col(name).alias("name")).agg(*aggs)
 
     def merge_batch(self, batch_df: DataFrame, **cols) -> None:

@@ -63,6 +63,16 @@ def test_math_forward_rejoin(spark):
     assert mf.apply(df).first()["value"] == "10,6,5"
 
 
+def test_math_forward_named_output_reads_rewritten_field_once(spark):
+    """A named op reading a field an earlier op rewrote sees that op
+    applied once, in line-rewrite mode as in typed mode."""
+    df = spark.createDataFrame([("a,10",)], "value string")
+    mf = MathForward(ops=[MathOp("i1", "i1*2"), MathOp("x", "i1+0")])
+    row = mf.apply(df).first()
+    assert (row["value"], row["x"]) == ("a,20", 20.0)
+    assert mf.apply_typed(df).first()["x"] == 20.0
+
+
 def test_math_forward_nmea_suffix(spark):
     """suffix="nmea" re-appends a *HH checksum over the REWRITTEN body
     (MathForward.java:279-286)."""

@@ -399,13 +399,60 @@ class TestTriggerBatchInvariance:
 
 class TestStoreParityDriverVsStateStore:
     """The driver-side ValuesStore and the applyInPandasWithState
-    variant advertise the SAME aggregation contract — pin it with a
-    random stream replayed through both."""
+    variant advertise the SAME aggregation contract — pin it with
+    streams replayed through both."""
+
+    @staticmethod
+    def _both(spark, tmp_path, merges, files, history_n=5):
+        """Snapshots by key: ``merges`` through ValuesStore.merge_batch,
+        one batch each, and ``files`` streamed one per micro-batch
+        through stateful_values."""
+        import os
+
+        from dcafs_spark.streaming.values_store import ValuesStore
+
+        store = ValuesStore(history_n=history_n)
+        for batch in merges:
+            store.merge_batch(
+                spark.createDataFrame(batch, "group string, name string, value double, ts double")
+            )
+        driver_snap = {(s["group"], s["name"]): s for s in store.snapshot()}
+
+        watch = tmp_path / "w"
+        watch.mkdir()
+        for fi, rows in enumerate(files):
+            f = watch / f"b{fi}.txt"
+            f.write_text("".join(f"{g},{n},{v},{t}\n" for g, n, v, t in rows))
+            # distinct mtimes: the file source orders by modification time,
+            # and both stores' history is by ARRIVAL (reference stamps at
+            # receive time) — the replay must control arrival order
+            os.utime(f, (1_700_000_000 + fi, 1_700_000_000 + fi))
+        raw = spark.readStream.option("maxFilesPerTrigger", 1).text(str(watch))
+        arr = F.split("value", ",")
+        keyed = raw.select(
+            arr[0].alias("g"),
+            arr[1].alias("n"),
+            arr[2].cast("double").alias("v"),
+            arr[3].cast("double").alias("t"),
+        )
+        out = stateful_values(keyed, history_n=history_n, group="g", name="n", value="v", ts="t")
+        seen: dict = {}
+        q = (
+            out.writeStream.outputMode("update")
+            .foreachBatch(
+                lambda df, bid: seen.update({(r["group"], r["name"]): r for r in df.collect()})
+            )
+            .start()
+        )
+        total = sum(len(rows) for rows in files)
+        try:
+            assert _drain(q, lambda: sum(r["n_updates"] for r in seen.values()) == total)
+        finally:
+            q.stop()
+        return driver_snap, seen
 
     def test_snapshots_agree(self, spark, tmp_path):
         import random
-
-        from dcafs_spark.streaming.values_store import ValuesStore
 
         rng = random.Random(99)
         rows = []
@@ -416,52 +463,15 @@ class TestStoreParityDriverVsStateStore:
             t += 1.0  # unique increasing ts -> deterministic last/history
             rows.append((g, n, round(rng.uniform(0, 100), 2), t))
 
-        # driver-side store: 4 merge batches
-        store = ValuesStore(history_n=5)
-        for i in range(0, 60, 15):
-            store.merge_batch(
-                spark.createDataFrame(
-                    rows[i : i + 15], "group string, name string, value double, ts double"
-                )
-            )
-        driver_snap = {(s["group"], s["name"]): s for s in store.snapshot()}
-
-        # state-store variant: same rows via 2 streamed files
-        watch = tmp_path / "w"
-        watch.mkdir()
-        for fi, lo in enumerate(range(0, 60, 30)):
-            f = watch / f"b{fi}.txt"
-            f.write_text(
-                "".join(f"{g},{n},{v},{t}\n" for g, n, v, t in rows[lo : lo + 30])
-            )
-            # distinct mtimes: the file source orders by modification time,
-            # and both stores' history is by ARRIVAL (reference stamps at
-            # receive time) — the replay must control arrival order
-            import os
-
-            os.utime(f, (1_700_000_000 + fi, 1_700_000_000 + fi))
-        raw = spark.readStream.option("maxFilesPerTrigger", 1).text(str(watch))
-        arr = F.split("value", ",")
-        keyed = raw.select(
-            arr[0].alias("g"),
-            arr[1].alias("n"),
-            arr[2].cast("double").alias("v"),
-            arr[3].cast("double").alias("t"),
+        # driver-side store: 4 merge batches; state store: 2 streamed files
+        driver_snap, seen = self._both(
+            spark,
+            tmp_path,
+            [rows[i : i + 15] for i in range(0, 60, 15)],
+            [rows[lo : lo + 30] for lo in range(0, 60, 30)],
         )
-        out = stateful_values(keyed, history_n=5, group="g", name="n", value="v", ts="t")
-        seen: dict = {}
-        q = (
-            out.writeStream.outputMode("update")
-            .foreachBatch(
-                lambda df, bid: seen.update({(r["group"], r["name"]): r for r in df.collect()})
-            )
-            .start()
-        )
-        try:
-            assert _drain(q, lambda: len(seen) >= 4 and max(r["n_updates"] for r in seen.values()) > 0 and sum(r["n_updates"] for r in seen.values()) == 60)
-        finally:
-            q.stop()
 
+        assert len(seen) >= 4
         assert set(seen) == set(driver_snap)
         for key, s in seen.items():
             d = driver_snap[key]
@@ -475,6 +485,17 @@ class TestStoreParityDriverVsStateStore:
                 assert s["hist_stdev"] is None, key
             else:
                 assert s["hist_stdev"] == pytest.approx(d["hist_stdev"], rel=1e-9), key
+
+    def test_late_batch_latest_wins(self, spark, tmp_path):
+        """A later batch's value replaces the last value even when its ts
+        is older: records are stamped on receipt (Datagram.java:120-132),
+        so the latest batch wins, by max ts within a batch."""
+        batches = [[("ctd", "temp", 1.0, 10.0)], [("ctd", "temp", 2.0, 5.0)]]
+        driver_snap, seen = self._both(spark, tmp_path, batches, batches)
+        key = ("ctd", "temp")
+        assert driver_snap[key]["last_value"] == 2.0
+        assert seen[key]["last_value"] == 2.0
+        assert driver_snap[key]["n_updates"] == seen[key]["n_updates"] == 2
 
 
 class TestStreamStreamIntervalJoin:
@@ -598,6 +619,7 @@ class TestStateRecoveryAcrossRestart:
     state, not just source offsets."""
 
     def test_running_aggregates_resume(self, spark, tmp_path):
+        from dcafs_spark.session import CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER
         from dcafs_spark.streaming.stateful import stateful_values
 
         watch = tmp_path / "w"
@@ -621,16 +643,24 @@ class TestStateRecoveryAcrossRestart:
                 .start()
             )
 
+        # run 1 writes its checkpoint under Spark's default (FileContext)
+        # checkpoint file manager; run 2 resumes it under the FileSystem
+        # one that get_spark sets on a local master
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == FS_CHECKPOINT_MANAGER
         rows1: list = []
         (watch / "b1.txt").write_text("ctd,temp,10,1\nctd,temp,20,2\n")
-        q = start(rows1)
+        spark.conf.unset(CHECKPOINT_MANAGER_KEY)
         try:
-            assert _drain(q, lambda: len(rows1) >= 1)
-            assert rows1[-1]["n_updates"] == 2
-            assert rows1[-1]["min_value"] == 10.0
+            q = start(rows1)
+            try:
+                assert _drain(q, lambda: len(rows1) >= 1)
+                assert rows1[-1]["n_updates"] == 2
+                assert rows1[-1]["min_value"] == 10.0
+            finally:
+                q.stop()
+                q.awaitTermination(10)
         finally:
-            q.stop()
-            q.awaitTermination(10)
+            spark.conf.set(CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER)
 
         # new file arrives while the query is DOWN; a fresh query on the
         # same checkpoint must resume with the old state (min stays 5's
@@ -647,6 +677,22 @@ class TestStateRecoveryAcrossRestart:
         finally:
             q2.stop()
             q2.awaitTermination(10)
+
+
+class TestCheckpointFileManager:
+    def test_local_session_uses_filesystem_manager(self, spark, tmp_path):
+        """get_spark on a local master routes streaming checkpoint writes
+        through the FileSystem-based manager, and Spark resolves it."""
+        from dcafs_spark.session import CHECKPOINT_MANAGER_KEY, FS_CHECKPOINT_MANAGER
+
+        assert spark.sparkContext.master.startswith("local")
+        assert spark.conf.get(CHECKPOINT_MANAGER_KEY) == FS_CHECKPOINT_MANAGER
+        jvm = spark.sparkContext._jvm
+        manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager.create(
+            jvm.org.apache.hadoop.fs.Path(str(tmp_path)),
+            spark._jsparkSession.sessionState().newHadoopConf(),
+        )
+        assert manager.getClass().getName() == FS_CHECKPOINT_MANAGER
 
 
 class TestValuesStoreReviewRegressions:
@@ -740,6 +786,37 @@ class TestValuesStoreOneAggregation:
         # same per-key state either way; the rule saw the whole sequence
         assert plain.state == ruled.state and len(plain.state) == 20
         assert [v for *_k, v in ruled.fired_log] == [11.0, 12.0] * 8
+
+
+    def test_batch_deltas_literal(self, spark):
+        """NULL ts sorts first, tied ts order by value, the tail keeps the
+        last history_n values, and only the ruled key gets a sequence."""
+        from dcafs_spark.streaming.values_store import ValuesStore
+
+        df = spark.createDataFrame(
+            [
+                ("g", "a", 5.0, None),
+                ("g", "a", 1.0, 1.0),
+                ("g", "a", 3.0, 2.0),
+                ("g", "a", 2.0, 2.0),
+                ("g", "a", 4.0, 3.0),
+                ("g", "a", None, 4.0),
+                ("g", "b", 7.0, 1.0),
+                ("g", "b", 6.0, 1.0),
+                ("g", "b", 9.0, 2.0),
+            ],
+            "group string, name string, value double, ts double",
+        ).repartition(3)
+        rows = ValuesStore(history_n=3).batch_deltas(df, seq_keys={("g", "a")}).collect()
+        got = {
+            r["name"]: (r["d_last"], r["d_min"], r["d_max"], r["d_count"], r["d_sum"], r["d_ts"],
+                        r["d_tail"], r["d_seq"])
+            for r in rows
+        }
+        assert got == {
+            "a": (4.0, 1.0, 5.0, 5, 15.0, 3.0, [2.0, 3.0, 4.0], [5.0, 1.0, 2.0, 3.0, 4.0]),
+            "b": (9.0, 6.0, 9.0, 3, 22.0, 2.0, [6.0, 7.0, 9.0], []),
+        }
 
 
 class TestSqliteUpsertReviewFixes:
