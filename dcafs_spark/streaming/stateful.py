@@ -4,16 +4,14 @@ The driver-side ValuesStore (values_store.py) is right when key
 cardinality = #sensor ids (the reference's regime). This module is the
 scale-out variant SURVEY §4.2 calls for: per-key state lives in the
 Spark state store (RocksDB-backed on a real cluster, checkpointed,
-sharded across executors), so the key space can be unbounded — same
-aggregation contract, no driver involvement.
-
-State per (group, name): last value+ts, running min/max/count/sum, and
-the history ring buffer (RealVal.java:145-182,385-414 semantics,
-including sample-stdev-only-when-window-full)."""
+sharded across executors), so the key space can be unbounded, with no
+driver involvement. The running-value contract is values_store.py's:
+the state is its ``_KeyState`` (``STATE_SCHEMA`` has the same fields in
+the same order), and each update goes through its ``fold`` and
+``summary``."""
 
 from __future__ import annotations
 
-import math
 from collections.abc import Iterator
 from typing import Any
 
@@ -28,6 +26,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from dcafs_spark.streaming.values_store import SUMMARY_FIELDS, _KeyState, check_history_n, fold, summary
 
 STATE_SCHEMA = StructType(
     [
@@ -56,34 +56,18 @@ OUTPUT_SCHEMA = StructType(
 )
 
 
-_OUT_COLS = [f.name for f in OUTPUT_SCHEMA.fields]
+_OUT_COLS = ["group", "name", *SUMMARY_FIELDS]
 
 
 def _update_fn(history_n: int):
     import numpy as np
 
     def update(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.exists:
-            last, vmin, vmax, cnt, total, hist, last_ts = state.get
-            hist = list(hist)
-        else:
-            last, vmin, vmax, cnt, total, hist, last_ts = None, math.inf, -math.inf, 0, 0.0, [], -math.inf
-        # This function runs once per KEY per micro-batch — with a few
-        # thousand keys the per-call constant IS the addBatch knee
-        # (r15 profile: pandas dropna 1011 µs + sort_values 165 µs +
-        # Series min/max/sum 86 µs per call vs 15 µs for the numpy
-        # forms below; output-frame construction 316 µs is the pandas
-        # floor). NULL value/ts rows are still dropped up front (a NaN
-        # value would make cnt disagree with the sum, poison the
-        # history ring, and a NaN ts sorts last, freezing last_value) —
-        # as a numpy mask with a no-copy fast path instead of dropna.
-        # All chunks still concatenate before ONE event-time sort (a
-        # key spanning several Arrow chunks arrives in arbitrary
-        # cross-chunk order — round-11 review); the stable argsort
-        # additionally makes tied-timestamp order deterministic where
-        # sort_values' quicksort was not. Values are bit-identical:
-        # numpy min/max/sum on the same float64 data are the same
-        # kernels pandas dispatches to (no bottleneck in this env).
+        # Runs once per KEY per micro-batch, so the per-call constant is
+        # the addBatch knee: numpy forms here, not pandas (dropna and
+        # sort_values cost ~1.2 ms a call against ~15 µs). A key may
+        # span several Arrow chunks in arbitrary order, so all chunks
+        # join before one (ts, value) sort.
         vlist, tlist = [], []
         for p in pdfs:
             v = p["value"].to_numpy(dtype=float, copy=False)
@@ -94,44 +78,26 @@ def _update_fn(history_n: int):
             if len(v):
                 vlist.append(v)
                 tlist.append(t)
-        if vlist:
-            v = np.concatenate(vlist) if len(vlist) > 1 else vlist[0]
-            t = np.concatenate(tlist) if len(tlist) > 1 else tlist[0]
-            order = np.argsort(t, kind="stable")
-            v, t = v[order], t[order]
-            vmin = min(vmin, v.min())
-            vmax = max(vmax, v.max())
-            cnt += len(v)
-            total += float(v.sum())
-            # the latest batch wins, by max ts within it: the reference
-            # stamps records on receipt, and ValuesStore keeps this rule
-            last = float(v[-1])
-            last_ts = float(t[-1])
-            hist = (hist + v.tolist())[-history_n:]
-        state.update((last, vmin, vmax, cnt, total, hist, last_ts))
-        full = len(hist) >= history_n
-        mean = sum(hist) / len(hist) if hist else None
-        stdev = None
-        if full and len(hist) > 1:
-            stdev = math.sqrt(sum((x - mean) ** 2 for x in hist) / (len(hist) - 1))
+        if not vlist:  # nothing to measure: the key is not updated
+            return
+        v = np.concatenate(vlist) if len(vlist) > 1 else vlist[0]
+        t = np.concatenate(tlist) if len(tlist) > 1 else tlist[0]
+        order = np.lexsort((v, t))
+        v, t = v[order], t[order]
+        st = _KeyState(*state.get) if state.exists else _KeyState()
+        tail = v[-history_n:].tolist()
+        delta = (tail[-1], float(v.min()), float(v.max()), len(v), float(v.sum()), float(t[-1]), tail)
+        fold(st, delta, history_n)
+        # the fields in STATE_SCHEMA order; astuple would deep-copy (~20 µs)
+        state.update(tuple(vars(st).values()))
         # one-row output via a pre-shaped object ndarray: 121 µs vs
         # 255-316 µs for the list-of-tuples constructor (×~2000 keys
         # per batch that difference is ~0.4 s of addBatch). Object
         # dtype keeps None → NULL for the nullable double fields — a
         # typed template would coerce None to NaN, which Arrow ships
         # as NaN, not NULL.
-        out = np.empty((1, 9), dtype=object)
-        out[0] = (
-            key[0],
-            key[1],
-            last,
-            vmin,
-            vmax,
-            round(total / cnt, 3) if cnt else None,
-            round(mean, 3) if mean is not None else None,
-            stdev,
-            cnt,
-        )
+        out = np.empty((1, len(_OUT_COLS)), dtype=object)
+        out[0] = (key[0], key[1], *summary(st, history_n))
         yield pd.DataFrame(out, columns=_OUT_COLS)
 
     return update
@@ -154,11 +120,7 @@ def stateful_values(
     what keeps state-store size O(#keys) instead of O(#rows)."""
     from pyspark.sql import functions as F
 
-    if history_n < 1:
-        raise ValueError(
-            f"history_n must be >= 1 (got {history_n}): a non-positive ring "
-            "size would make per-key state grow unboundedly"
-        )
+    check_history_n(history_n)
 
     keyed = stream_df.select(
         F.col(group).alias("group"),

@@ -7,11 +7,20 @@ hysteresis — a comparison trigger fires ONCE when its condition
 becomes true and re-arms only after the condition clears,
 `RealVal.java:527-531`).
 
-Design (SURVEY §3.1 Spark equivalent): the stream is aggregated
-per micro-batch (map-side partial agg → tiny shuffle keyed by
-(group,name)), and the per-key *running* state — last value,
-running min/max, count, history tail, armed/fired trigger flags —
-merges batch deltas driver-side in ``foreachBatch``.
+The running-value contract, shared with ``stateful.stateful_values``
+(`RealVal.java:145-182,385-414`): a key's state is ``_KeyState`` (last
+value, min/max, count, sum, the last ``history_n`` values, last ts).
+Rows with a NULL value or ts are not measurements and are dropped. A
+batch is ordered by (ts, value) and its last row is its last value;
+the latest batch wins even when its ts is older (the reference stamps
+records on receipt). ``fold`` merges a batch's per-key delta and
+``summary`` reads the output fields, whose ``hist_stdev`` is None
+until the history ring is full.
+
+Design (SURVEY §3.1 Spark equivalent): the stream is aggregated per
+micro-batch (map-side partial agg → tiny shuffle keyed by
+(group,name)), and the deltas fold into driver-side state in
+``foreachBatch``.
 
 Why driver-side state is the scale-correct choice here: the key
 cardinality is the number of distinct sensor value ids — hundreds,
@@ -19,16 +28,16 @@ not billions (`RealtimeValues` is a flat in-memory map in the
 reference too). Each micro-batch reduces arbitrarily many input rows
 to ≤ one delta row per key BEFORE it reaches the driver, so driver
 work per batch is O(#keys), independent of data volume. For
-billion-key state you'd swap this class for
-``applyInPandasWithState`` with the same merge function; the
-aggregation contract is identical.
+billion-key state, ``stateful.stateful_values`` holds the same
+``_KeyState`` in the Spark state store and folds it with ``fold``.
 """
 
 from __future__ import annotations
 
 import math
+from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
-from typing import Any, Callable
+from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -64,6 +73,58 @@ class _KeyState:
     last_ts: Any = None
 
 
+SUMMARY_FIELDS = (
+    "last_value", "min_value", "max_value", "avg_value", "hist_avg", "hist_stdev", "n_updates",
+)
+
+
+def check_history_n(history_n: int) -> None:
+    if history_n < 1:
+        raise ValueError(
+            f"history_n must be >= 1 (got {history_n}): a non-positive ring "
+            "size would make per-key state grow unboundedly"
+        )
+
+
+def fold(st: _KeyState, delta: Sequence, history_n: int) -> None:
+    """Merge one batch's delta for a key into ``st``. ``delta`` is
+    (last, min, max, count, sum, last ts, tail): the tail holds the
+    batch's last values in (ts, value) order, and last / last ts are
+    its final element."""
+    last, vmin, vmax, count, total, last_ts, tail = delta
+    st.last = last
+    st.min = min(st.min, vmin)
+    st.max = max(st.max, vmax)
+    st.count += count
+    st.total += total
+    st.last_ts = last_ts
+    st.history = [*st.history, *tail][-history_n:]
+
+
+def hist_stdev(hist: Sequence[float], history_n: int) -> float | None:
+    """Sample stdev of the history ring; None until the ring is full
+    (RealVal.java:515-521 NaN guard). It needs >= 2 points, so a
+    history_n=1 ring never has one."""
+    if len(hist) < max(history_n, 2):
+        return None
+    mean = sum(hist) / len(hist)
+    return math.sqrt(sum((x - mean) ** 2 for x in hist) / (len(hist) - 1))
+
+
+def summary(st: _KeyState, history_n: int) -> tuple:
+    """The ``SUMMARY_FIELDS`` of one key's state."""
+    hist = st.history
+    return (
+        st.last,
+        st.min if st.count else None,
+        st.max if st.count else None,
+        round(st.total / st.count, 3) if st.count else None,
+        round(sum(hist) / len(hist), 3) if hist else None,
+        hist_stdev(hist, history_n),
+        st.count,
+    )
+
+
 class ValuesStore:
     """Driver-side running store fed by per-batch aggregate deltas.
 
@@ -75,6 +136,7 @@ class ValuesStore:
     scales to unbounded keys."""
 
     def __init__(self, history_n: int = 10, max_keys: int = 100_000):
+        check_history_n(history_n)
         self.history_n = history_n
         self.max_keys = max_keys
         self.state: dict[tuple[str, str], _KeyState] = {}
@@ -92,22 +154,24 @@ class ValuesStore:
     ) -> DataFrame:
         """Distributed reduction: one delta row per key per batch.
 
-        collect_list over the groupBy is bounded: only the last
-        ``history_n`` values matter, so we aggregate the batch tail via
-        max_by struct packing (avoids shipping whole batches driver-side).
+        The columns after group and name are ``fold``'s delta, in its
+        order. collect_list over the groupBy is bounded: only the last
+        ``history_n`` (ts, value) structs are kept as the tail (avoids
+        shipping whole batches driver-side), and last / last ts are the
+        tail's final element.
 
         ``seq_keys`` (the ruled keys, few by construction) additionally
         get their full ts-ordered value sequence in ``d_seq`` — inside
         the same aggregation, so rules cost no extra job; every other
         key's ``d_seq`` is empty.
 
-        NULL values are non-measurements (the reference's RealVal only
-        updates on a parsed double) and are dropped up front: without
-        the filter an all-NULL key crashes the merge on min(inf, None)
-        and a mixed batch whose latest-ts value is NULL overwrites
-        last/history with None.
+        Rows with a NULL value or ts are non-measurements (the
+        reference's RealVal only updates on a parsed double) and are
+        dropped up front: without the filter an all-NULL key crashes the
+        merge on min(inf, None), and a NULL ts would sort first yet
+        still count.
         """
-        df = df.filter(F.col(value).isNotNull())
+        df = df.filter(F.col(value).isNotNull() & F.col(ts).isNotNull())
         tv = F.struct(F.col(ts).alias("t"), F.col(value).alias("v"))
         # no lambdas: higher-order functions (array_sort, transform) are
         # interpreted row by row inside the generated result projection;
@@ -119,13 +183,14 @@ class ValuesStore:
         tail = F.slice(
             packed, F.greatest(F.lit(-self.history_n), -F.size(packed)), F.lit(self.history_n)
         )
+        latest = F.element_at(tail, -1)  # never empty: history_n >= 1
         aggs = [
-            F.max_by(F.col(value), F.col(ts)).alias("d_last"),
+            latest.getField("v").alias("d_last"),
             F.min(value).alias("d_min"),
             F.max(value).alias("d_max"),
             F.count(value).alias("d_count"),
             F.sum(value).alias("d_sum"),
-            F.max(ts).alias("d_ts"),
+            latest.getField("t").alias("d_ts"),
             tail.getField("v").alias("d_tail"),
         ]
         if seq_keys:
@@ -152,15 +217,8 @@ class ValuesStore:
         for row in delta_rows:
             key = (row["group"], row["name"])
             st = self.state.setdefault(key, _KeyState())
-            prev = st.last
-            st.last = row["d_last"]
-            st.min = min(st.min, row["d_min"])
-            st.max = max(st.max, row["d_max"])
-            st.count += row["d_count"]
-            st.total += row["d_sum"]
-            st.last_ts = row["d_ts"]
-            pre_hist = list(st.history)
-            st.history = (st.history + list(row["d_tail"]))[-self.history_n :]
+            prev, pre_hist = st.last, st.history
+            fold(st, row[2:9], self.history_n)
             if key in ruled:
                 self._eval_rules_seq(key, prev, list(row["d_seq"]), pre_hist)
         if len(self.state) > self.max_keys:
@@ -200,20 +258,11 @@ class ValuesStore:
                     if p is None or p != new:
                         self._fire(rule, key, new)
                 elif rule.kind in ("comparison", "stdev"):
-                    if rule.kind == "stdev":
-                        # compare the rolling history's sample stdev
-                        # instead of the value; skip until the window is
-                        # full (RealVal.java:515-521 NaN guard). Sample
-                        # stdev needs >= 2 points, so a history_n=1
-                        # store never fires (snapshot() applies the
-                        # same len>1 rule) instead of dividing by zero
-                        if len(hist) < max(self.history_n, 2):
-                            continue
-                        mean = sum(hist) / len(hist)
-                        var = sum((x - mean) ** 2 for x in hist) / (len(hist) - 1)
-                        probe = math.sqrt(var)
-                    else:
-                        probe = new
+                    # a stdev rule compares the ring's stdev instead of
+                    # the value, and waits until the ring is full
+                    probe = hist_stdev(hist, self.history_n) if rule.kind == "stdev" else new
+                    if probe is None:
+                        continue
                     ok = rule._check(probe)
                     if ok and not rule.fired:  # fire once, then hold
                         rule.fired = True
@@ -230,16 +279,17 @@ class ValuesStore:
     # ----------------------------------------------- text / flag values
     def merge_text_batch(self, df: DataFrame, group="group", name="name", value="value", ts="ts") -> None:
         """TextVal flavor (RealtimeValues.java:31): last text per key —
-        the batch reduces to one max_by row per key distributedly.
+        the batch reduces to one row per key distributedly, under the
+        numeric path's rules: rows with a NULL text or ts are dropped,
+        and the last text is the greatest by (ts, text).
 
-        NULL texts are non-measurements and are dropped up front, the
-        same discipline as the numeric path (round-10 fix there,
-        round-11 review here): without the filter a batch whose
-        latest-ts row failed to parse overwrites a good stored text
-        with None, and an all-NULL key erases the entry."""
-        deltas = df.filter(F.col(value).isNotNull()).groupBy(
+        Without the NULL filter a batch whose latest-ts row failed to
+        parse overwrites a good stored text with None, and an all-NULL
+        key erases the entry."""
+        last = F.max(F.struct(F.col(ts).alias("t"), F.col(value).alias("v")))
+        deltas = df.filter(F.col(value).isNotNull() & F.col(ts).isNotNull()).groupBy(
             F.col(group).alias("group"), F.col(name).alias("name")
-        ).agg(F.max_by(F.col(value), F.col(ts)).alias("d_last"), F.max(ts).alias("d_ts"))
+        ).agg(last.getField("v").alias("d_last"))
         for row in deltas.collect():
             self.texts[(row["group"], row["name"])] = row["d_last"]
 
@@ -294,14 +344,8 @@ class ValuesStore:
         for key, st in self.state.items():
             if key[0] != group:
                 continue
-            prev = st.last
-            pre_hist = list(st.history)  # rules see the REAL rolling
-            st.last = value  # window, as a merge_batch update would
-            st.min = min(st.min, value)
-            st.max = max(st.max, value)
-            st.count += 1
-            st.total += value
-            st.history = (st.history + [value])[-self.history_n :]
+            prev, pre_hist = st.last, st.history  # rules see the real ring
+            fold(st, (value, value, value, 1, value, st.last_ts, [value]), self.history_n)
             self._eval_rules_seq(key, prev, [value], pre_hist)
             n += 1
         return n
@@ -309,30 +353,15 @@ class ValuesStore:
     # ------------------------------------------------------------- reads
     def snapshot(self) -> list[dict]:
         """Current-values table (rv-style listing)."""
-        out = []
-        for (g, n), st in sorted(self.state.items()):
-            hist = st.history
-            full = len(hist) >= self.history_n
-            mean = sum(hist) / len(hist) if hist else None
-            stdev = None
-            if full and len(hist) > 1:
-                m = mean
-                stdev = math.sqrt(sum((x - m) ** 2 for x in hist) / (len(hist) - 1))
-            out.append(
-                {
-                    "group": g,
-                    "name": n,
-                    "last_value": st.last,
-                    "min_value": st.min if st.count else None,
-                    "max_value": st.max if st.count else None,
-                    "avg_value": round(st.total / st.count, 3) if st.count else None,
-                    "hist_avg": round(mean, 3) if mean is not None else None,
-                    "hist_stdev": stdev,  # NaN-until-full contract → None
-                    "n_updates": st.count,
-                    "last_ts": st.last_ts,
-                }
-            )
-        return out
+        return [
+            {
+                "group": g,
+                "name": n,
+                **dict(zip(SUMMARY_FIELDS, summary(st, self.history_n))),
+                "last_ts": st.last_ts,
+            }
+            for (g, n), st in sorted(self.state.items())
+        ]
 
     def get(self, group: str, name: str) -> float | None:
         st = self.state.get((group, name))

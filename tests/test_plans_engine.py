@@ -611,6 +611,14 @@ class TestSkewAndTextFlags:
         store.merge_text_batch(nulls)
         assert store.get_text("nav", "mode") == "manual"
         assert store.get_text("nav", "heading") is None
+        # tied ts: the greatest text wins at any partition count
+        tied = spark.createDataFrame(
+            [("nav", "tie", f"t{i:02d}", 4) for i in (7, 19, 3, 12, 0, 15, 8, 11, 2, 18, 5, 14)],
+            "group string, name string, value string, ts long",
+        )
+        for parts in (1, 8):
+            store.merge_text_batch(tied.repartition(parts))
+            assert store.get_text("nav", "tie") == "t19", parts
         assert store.set_flag("nav", "alarm", "raise") is True
         assert store.set_flag("nav", "alarm", "toggle") is False
         assert store.get_flag("nav", "alarm") is False

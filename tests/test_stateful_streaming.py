@@ -96,6 +96,11 @@ class TestStatefulValues:
         assert final["hist_stdev"] == final["hist_stdev"]  # not NaN
 
     def test_history_n_must_be_positive(self, spark):
+        from dcafs_spark.streaming.values_store import ValuesStore
+
+        for bad in (0, -1):  # the driver store checks at construction too
+            with pytest.raises(ValueError, match="history_n"):
+                ValuesStore(history_n=bad)
         with pytest.raises(ValueError, match="history_n"):
             stateful_values(
                 spark.range(1).selectExpr(
@@ -403,10 +408,11 @@ class TestStoreParityDriverVsStateStore:
     streams replayed through both."""
 
     @staticmethod
-    def _both(spark, tmp_path, merges, files, history_n=5):
+    def _both(spark, tmp_path, merges, files, history_n=5, files_per_batch=1):
         """Snapshots by key: ``merges`` through ValuesStore.merge_batch,
-        one batch each, and ``files`` streamed one per micro-batch
-        through stateful_values."""
+        one batch each, and ``files`` streamed ``files_per_batch`` per
+        micro-batch through stateful_values. A None value or ts is
+        written as an empty field, which reads back as NULL."""
         import os
 
         from dcafs_spark.streaming.values_store import ValuesStore
@@ -418,22 +424,25 @@ class TestStoreParityDriverVsStateStore:
             )
         driver_snap = {(s["group"], s["name"]): s for s in store.snapshot()}
 
+        def field(x):
+            return "" if x is None else x
+
         watch = tmp_path / "w"
         watch.mkdir()
         for fi, rows in enumerate(files):
             f = watch / f"b{fi}.txt"
-            f.write_text("".join(f"{g},{n},{v},{t}\n" for g, n, v, t in rows))
+            f.write_text("".join(f"{g},{n},{field(v)},{field(t)}\n" for g, n, v, t in rows))
             # distinct mtimes: the file source orders by modification time,
             # and both stores' history is by ARRIVAL (reference stamps at
             # receive time) — the replay must control arrival order
             os.utime(f, (1_700_000_000 + fi, 1_700_000_000 + fi))
-        raw = spark.readStream.option("maxFilesPerTrigger", 1).text(str(watch))
+        raw = spark.readStream.option("maxFilesPerTrigger", files_per_batch).text(str(watch))
         arr = F.split("value", ",")
         keyed = raw.select(
             arr[0].alias("g"),
             arr[1].alias("n"),
-            arr[2].cast("double").alias("v"),
-            arr[3].cast("double").alias("t"),
+            arr[2].try_cast("double").alias("v"),
+            arr[3].try_cast("double").alias("t"),
         )
         out = stateful_values(keyed, history_n=history_n, group="g", name="n", value="v", ts="t")
         seen: dict = {}
@@ -444,12 +453,24 @@ class TestStoreParityDriverVsStateStore:
             )
             .start()
         )
-        total = sum(len(rows) for rows in files)
+        total = sum(v is not None and t is not None for rows in files for *_k, v, t in rows)
         try:
             assert _drain(q, lambda: sum(r["n_updates"] for r in seen.values()) == total)
         finally:
             q.stop()
         return driver_snap, seen
+
+    @staticmethod
+    def _assert_same(driver_snap, seen):
+        """Every output field of the two stores' snapshots is equal."""
+        from dcafs_spark.streaming.values_store import SUMMARY_FIELDS
+
+        assert set(seen) == set(driver_snap)
+        for key, s in seen.items():
+            for f in SUMMARY_FIELDS:
+                # the running sum may add in a different order
+                want = pytest.approx(driver_snap[key][f], abs=1e-9) if f == "avg_value" else driver_snap[key][f]
+                assert s[f] == want, (key, f)
 
     def test_snapshots_agree(self, spark, tmp_path):
         import random
@@ -496,6 +517,55 @@ class TestStoreParityDriverVsStateStore:
         assert driver_snap[key]["last_value"] == 2.0
         assert seen[key]["last_value"] == 2.0
         assert driver_snap[key]["n_updates"] == seen[key]["n_updates"] == 2
+        self._assert_same(driver_snap, seen)
+
+    def test_tied_ts_last_is_largest_value(self, spark, tmp_path):
+        """Within a batch rows order by (ts, value): 40 values at one ts
+        give the largest as last_value at any partition count."""
+        import random
+
+        from dcafs_spark.streaming.values_store import ValuesStore
+
+        values = [float(v) for v in random.Random(7).sample(range(40), 40)]
+        rows = [("ctd", "temp", v, 1.0) for v in values]
+        df = spark.createDataFrame(rows, "group string, name string, value double, ts double")
+        for parts in (1, 3, 8):
+            store = ValuesStore(history_n=5)
+            store.merge_batch(df.repartition(parts))
+            assert store.get("ctd", "temp") == 39.0, parts
+        driver_snap, seen = self._both(spark, tmp_path, [rows], [rows])
+        assert seen[("ctd", "temp")]["last_value"] == 39.0
+        self._assert_same(driver_snap, seen)
+
+    def test_null_ts_and_null_values_dropped(self, spark, tmp_path):
+        """A row with a NULL ts is dropped like one with a NULL value; a
+        key with no complete row is not in either store."""
+        rows = [
+            ("ctd", "temp", 1.0, 1.0),
+            ("ctd", "temp", 5.0, None),
+            ("ctd", "temp", 4.0, 2.0),
+            ("ctd", "temp", None, 3.0),
+            ("ctd", "bad", None, 1.0),
+            ("ctd", "bad", 7.0, None),
+        ]
+        driver_snap, seen = self._both(spark, tmp_path, [rows], [rows])
+        key = ("ctd", "temp")
+        for snap in (driver_snap, seen):
+            assert (snap[key]["n_updates"], snap[key]["max_value"], snap[key]["last_value"]) == (2, 4.0, 4.0)
+        assert ("ctd", "bad") not in driver_snap
+        self._assert_same(driver_snap, seen)
+
+    def test_key_split_across_two_files(self, spark, tmp_path):
+        """One micro-batch reads a key from two files, interleaved in ts
+        and tied at the last ts; a second batch follows."""
+        a = [("nav", "hdg", float(10 + i), float(2 * i)) for i in range(6)] + [("nav", "hdg", 9.0, 20.0)]
+        b = [("nav", "hdg", float(20 + i), float(2 * i + 1)) for i in range(6)] + [("nav", "hdg", 8.0, 20.0)]
+        c = [("nav", "hdg", 3.0, 21.0), ("nav", "spd", 1.5, 21.0)]
+        driver_snap, seen = self._both(spark, tmp_path, [a + b, c], [a, b, c], files_per_batch=2)
+        assert seen[("nav", "hdg")]["n_updates"] == 15
+        # ring of 5 in (ts, value) order: 15@10, 25@11, 8@20, 9@20, then 3@21
+        assert driver_snap[("nav", "hdg")]["hist_avg"] == round((15 + 25 + 8 + 9 + 3) / 5, 3)
+        self._assert_same(driver_snap, seen)
 
 
 class TestStreamStreamIntervalJoin:
@@ -789,8 +859,8 @@ class TestValuesStoreOneAggregation:
 
 
     def test_batch_deltas_literal(self, spark):
-        """NULL ts sorts first, tied ts order by value, the tail keeps the
-        last history_n values, and only the ruled key gets a sequence."""
+        """A NULL-ts row is dropped, tied ts order by value, the tail keeps
+        the last history_n values, and only the ruled key gets a sequence."""
         from dcafs_spark.streaming.values_store import ValuesStore
 
         df = spark.createDataFrame(
@@ -814,7 +884,7 @@ class TestValuesStoreOneAggregation:
             for r in rows
         }
         assert got == {
-            "a": (4.0, 1.0, 5.0, 5, 15.0, 3.0, [2.0, 3.0, 4.0], [5.0, 1.0, 2.0, 3.0, 4.0]),
+            "a": (4.0, 1.0, 4.0, 4, 10.0, 3.0, [2.0, 3.0, 4.0], [1.0, 2.0, 3.0, 4.0]),
             "b": (9.0, 6.0, 9.0, 3, 22.0, 2.0, [6.0, 7.0, 9.0], []),
         }
 
